@@ -4,15 +4,17 @@
 (SURVEY.md §2.5 W5–W17) over the sf0.001 ``events`` table mapped to
 bar series (FIXTURES.md §3).
 
-``queries()`` / ``oracle_sql()`` — one entry per implemented operator
-from SURVEY.md §2 (+ the §7 extension surface); oracle SQL runs on
-DuckDB over the same parquet. EVERY query has an oracle — including
-the recursive Wilder/EMA family (DuckDB ``list_reduce`` lambdas
-replay the kernels' exact left-fold IEEE sequence; see
-``queries._wilder_oracle_sql``), the LSH/IVF ANN operators (shared
-md5-parity hyperplane literals + left-fold projections), the
-multi-stage grid pipeline, and the near-dup connected components
-(recursive CTE to the same fixpoint) — all bit-identical.
+``queries()`` / ``oracle_sql()`` — the records marked ``driver=True``
+in ``REGISTRY``; ``extra_queries()`` / ``extra_oracle_sql()`` — the
+rest, checked bit-exact by ``scripts/check_oracle.py --extras``.
+Oracle SQL runs on DuckDB over the same parquet. EVERY query has an
+oracle — including the recursive Wilder/EMA family (DuckDB
+``list_reduce`` lambdas replay the kernels' exact left-fold IEEE
+sequence; see ``queries._wilder_oracle_sql``), the LSH/IVF ANN
+operators (shared md5-parity hyperplane literals + left-fold
+projections), the multi-stage grid pipeline, and the near-dup
+connected components (recursive CTE to the same fixpoint) — all
+bit-identical.
 """
 
 from __future__ import annotations
@@ -23,13 +25,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from stock_indicators_etl_spark.config import IndicatorConfig
 from stock_indicators_etl_spark.operators.pipeline import generate_indicators
-from stock_indicators_etl_spark.queries import (
-    ORACLES,
-    QUERIES,
-    events_as_bars,
-    minute_bars,
-)
-from stock_indicators_etl_spark.queries_llm import ORACLES_LLM, QUERIES_LLM
+from stock_indicators_etl_spark.queries import RECORDS, Query, events_as_bars
+from stock_indicators_etl_spark.queries_llm import RECORDS_LLM
+
+#: every query, by name: the one source of each query's facts
+REGISTRY: dict[str, Query] = {q.name: q for q in (*RECORDS, *RECORDS_LLM)}
 
 
 def _ensure_session_conf(spark: SparkSession) -> None:
@@ -51,54 +51,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return generate_indicators(bars, IndicatorConfig(), assume_regular=True)
 
 
-def _q_indicator_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full grid pipeline (segment → fill → interpolate → indicators)
-    on events bucketed per event_type to a 10-minute grid (dense
-    enough that segments survive the min-2-rows rule); hash-checked
-    end-to-end against a full DuckDB list-lambda replay."""
-    step = 600
-    mb = minute_bars(spark, sf_dir, step_s=step, key="event_type").withColumnRenamed(
-        "price", "adj_close"
-    )
-    from pyspark.sql import functions as F
-
-    bars = (
-        mb.withColumn("close", F.col("adj_close"))
-        .withColumn("high", F.col("adj_close") + F.lit(1.0))
-        .withColumn("low", F.col("adj_close") - F.lit(1.0))
-        .withColumn("volume", F.lit(1.0))
-    )
-    cfg = IndicatorConfig(
-        grid_step_s=step, allowed_gaps_s=(step, 2 * step, 3 * step)
-    )
-    out = generate_indicators(bars, cfg)
-    from stock_indicators_etl_spark.queries import _rc
-
-    skip = {"window_start", "close_price", "ticker"}
-    return out.withColumns(
-        {c: _rc(F.col(c)) for c in out.columns if c not in skip}
-    )
-
-
-def _q_recursive(features: list[str]) -> Callable[[SparkSession, str], DataFrame]:
-    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
-        from stock_indicators_etl_spark.queries import _rc
-
-        bars = events_as_bars(spark, sf_dir)
-        cfg = IndicatorConfig(momentum_features=features)
-        out = generate_indicators(bars, cfg, assume_regular=True)
-        # 6dp floor-rounding convention on computed doubles (matches
-        # the DuckDB oracles)
-        skip = {"window_start", "close_price", "ticker"}
-        return out.withColumns(
-            {c: _rc(F.col(c)) for c in out.columns if c not in skip}
-        )
-
-    return run
-
-
 def _conf_wrapped(
     fn: Callable[[SparkSession, str], DataFrame],
 ) -> Callable[[SparkSession, str], DataFrame]:
@@ -109,908 +61,22 @@ def _conf_wrapped(
     return run
 
 
-# Registry rotation (VERDICT r5 #3): the driver records at most 50
-# queries, so the newest / most failure-prone operators sit in the
-# hard CORRECTNESS signal while long-stable trivial entries rotate to
-# the locally-checked extras (scripts/check_oracle.py --extras runs
-# BOTH sets bit-exact every round — nothing loses oracle coverage).
-ROTATED_OUT = (
-    # r5 rotation
-    "iso_week",
-    "hash_sample",
-    "scalar_timefns",
-    "unpivot_melt",
-    "media_stats",
-    "token_counts",
-    # r6 rotation: long-stable (since r3) scan-local text ops out...
-    "text_quality",
-    "language_id",
-    "doc_fingerprint",
-    "simhash",
-    "redact_pii",
-    "repetition_score",
-    # ...r6b rotation: stable single-shuffle ops out for the newest
-    # operator families (every rotated-out query keeps bit-exact
-    # coverage via extra_queries / check_oracle --extras)
-    "stratified_sample",
-    "token_shards",
-    "ngram_containment",
-    "regularity_check",
-    "ohlcv_rollup",
-    "cci",
-    # r7 rotation: long-stable (since r1-r2) single-indicator windows
-    # and grid ops out for the newest analytic/graph/stats operators
-    "mfi",
-    "ultosc",
-    "ppo",
-    "stochf",
-    "gapfill",
-    "interpolate",
-    # r7b rotation: stable-since-r1 single-indicator / filter / ANN
-    # entries out for the newest relational+curation operators
-    "market_hours_filter",
-    "rocp_mom",
-    "segmentation",
-    "aroonosc",
-    "lsh_bucketed_topk",
-    "dedup_survivors",
-    # r7c rotation: stable-since-r1/r2 join/ANN/signature entries out
-    # for this session's sketch/graph/quantization operators
-    "minhash_signatures",
-    "revenue_by_nation",
-    "top_orders_per_segment",
-    "universe_join",
-    "cosine_topk",
-    "embedding_neardup",
-    # r7d rotation: stable-since-r1 scan/window entries out for this
-    # session's change-detection / ANN / drift / exact-quantile ops
-    "pricing_summary",
-    "sessionize",
-    # r7e rotation: stable-since-r1/r5 dedup/retrieval entries out for
-    # the newest composite operators (temporal join, view maintenance,
-    # pruned exact join, dedup evaluation)
-    "ngram_jaccard",
-    "minhash_lsh_candidates",
-    "bm25_topk",
-    "kmeans",
-    # r8 rotation: long-stable dedup/ANN pipeline stages out for the
-    # newest graph/ranking/training/monitoring operators (the other
-    # six r8 outgoing — fuzzy_join, heavy_hitters, pack_sequences,
-    # audio_stats, tfidf_keywords, winsorize — were rotated-in names,
-    # so they simply moved back to the extras dict below)
-    "corpus_prep",
-    "neardup_components",
-    "neardup_survivors",
-    "ivf_topk",
-    # r10 rotation: long-stable base entry out for the r9/r9b wave
-    # (the other nine r10 outgoing — mad_outliers, triangles,
-    # kmv_distinct, kmv_overlap, rrf_fusion, bigram_surprisal, cusum,
-    # histogram_drift, exact_quantiles — were rotated-in names, so
-    # they simply moved back to the extras dict below)
-    "dedup_exact",
-)
-ROTATED_IN = (
-    # r5 rotation (funnel/retention/asof_join/interval_join rotated
-    # back OUT in r7d; bm25_topk/kmeans in r7e — all live in extras now)
-    # ...r6: the newest multi-stage operators into the hard signal
-    # (span_dedup/leakage_split/pq_topk/ivfpq_topk rotated back OUT
-    # in r9 — extras keep them bit-exact)
-    "tfidf_keywords",
-    "dedup_incremental",
-    # ...r6b: this round's new operator families (scd2_history
-    # rotated back OUT in r9; canonicalize in r12)
-    "heavy_hitters",
-    "fuzzy_join",
-    "pack_sequences",
-    "audio_stats",
-    # ...r7: graph/stats/DQ/clustering operators into the hard signal
-    # (pagerank rotated back OUT in r12 — extras keep it bit-exact)
-    "winsorize",
-    "semantic_neardup_scaled",
-    # ...r7b: this session's new operator families (mad_outliers /
-    # triangles / rrf_fusion / bigram_surprisal rotated back OUT in
-    # r10 — extras keep them bit-exact)
-    # ...r7c: distinct sketches, graph communities/cores, int8 ANN,
-    # robust rolling stats into the hard signal (kmv_distinct /
-    # kmv_overlap rotated back OUT in r10; kcore / label_prop in r12)
-    # ...r7d: CUSUM closed form, JL-projection ANN, IVF×SQ, drift,
-    # correlation matrix, exact quantiles into the hard signal
-    # (cusum / histogram_drift / exact_quantiles rotated back OUT in
-    # r10; rp_topk / ivfsq_topk in r12)
-    # ...r7e: the newest composite operators into the hard signal
-    # (dedup_eval rotated back OUT in r9: the exact-truth harness is
-    # the sf0.01-tier check; the SAMPLED form below is the production
-    # gate and takes the registry slot — VERDICT r8 next #4;
-    # allpairs_join rotated back OUT in r12)
-    # ...r8: the r7f/g wave into the hard signal (tfidf_keywords /
-    # heavy_hitters / fuzzy_join / pack_sequences / audio_stats /
-    # winsorize above rotated back OUT in r8; link_predict /
-    # multiprobe_lsh / ann_eval / knn_label / drawdown / rolling_beta
-    # / kl_drift / bollinger — each with 4 straight green hard checks
-    # — rotated back OUT in r12; extras keep them all bit-exact)
-    "contrastive_pairs",
-    "perceptron",
-    # ...r9: the r8 wave into the hard signal — distributed PCA,
-    # anisotropy correction, BPE corpus encode, Bloom join pruning,
-    # Benford DQ, and the sampled (production) dedup evaluation
-    "abtt",
-    "pca_power",
-    "bpe_encode",
-    "bloom_join",
-    "benford_check",
-    "dedup_eval_sampled",
-    # ...r10: the strongest r9/r9b newcomers into the hard signal —
-    # SimHash near-dup, winnowing (MOSS), benchmark decontamination,
-    # DSIR selection, containment join, modularity, Naive Bayes,
-    # purged temporal split, LOO target encoding, one-pass profiler
-    "simhash_neardup",
-    "winnow_matches",
-    "decontaminate",
-    "dsir_select",
-    "containment_join",
-    "modularity",
-    "nb_classify",
-    "temporal_split",
-    "target_encode",
-    "column_profile",
-    # ...r11: the ten newest never-driver-checked entries into the
-    # hard signal (dq_check / ols_by_key / cluster_keywords /
-    # cdc_merge / mix_domains / rolling_robust / corr_matrix /
-    # pit_join / agg_delta / sq_topk rotated back OUT this round —
-    # extras keep them bit-exact)
-    "tokenizer_fertility",
-    "substr_dedup",
-    "dup_span_audit",
-    "json_props",
-    "equidepth_bins",
-    "zipf_fit",
-    "ks_drift",
-    "mutual_info",
-    "line_dedup",
-    "gopher_rules",
-    # ...r12: fifteen never-driver-checked entries into the hard
-    # signal (VERDICT r11 next #2 — retiring the backlog at 15/round),
-    # prioritizing the LLM-ops surface: the unigram fertility gate,
-    # the semantic/embedding/perceptual near-dup family, the sketch
-    # gates, the DSIR evaluation legs, curation filters, and the
-    # corpus-stat drift/skew reports. Fifteen long-stable entries
-    # (3-4 straight green hard checks each) rotated out above —
-    # extras keep every one bit-exact.
-    "tokenizer_fertility_unigram",
-    "semantic_neardup",
-    "embedding_neardup_scaled",
-    "phash_neardup",
-    "cms_freq",
-    "hll_distinct",
-    "dup_fraction",
-    "skew_report",
-    "welch_drift",
-    "unigram_surprisal",
-    "dsir_auc",
-    "dsir_calibration",
-    "blocklist",
-    "temperature_mix",
-    "neardup_best",
-)
-
-
-def _rotated_in_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    from stock_indicators_etl_spark.queries import (
-        q_benford_check,
-        q_json_props,
-        q_equidepth_bins,
-        q_ks_drift,
-        q_bloom_join,
-        q_column_profile,
-        q_skew_report,
-        q_target_encode,
-        q_temporal_split,
-        q_welch_drift,
-    )
-    from stock_indicators_etl_spark.queries_llm import (
-        q_abtt,
-        q_tokenizer_fertility,
-        q_tokenizer_fertility_unigram,
-        q_substr_dedup,
-        q_dup_span_audit,
-        q_zipf_fit,
-        q_mutual_info,
-        q_line_dedup,
-        q_gopher_rules,
-        q_bpe_encode,
-        q_containment_join,
-        q_contrastive_pairs,
-        q_decontaminate,
-        q_dedup_eval_sampled,
-        q_dsir_select,
-        q_dsir_auc,
-        q_dsir_calibration,
-        q_modularity,
-        q_nb_classify,
-        q_pca_power,
-        q_perceptron,
-        q_simhash_neardup,
-        q_dedup_incremental,
-        q_semantic_neardup,
-        q_semantic_neardup_scaled,
-        q_embedding_neardup_scaled,
-        q_phash_neardup,
-        q_cms_freq,
-        q_hll_distinct,
-        q_dup_fraction,
-        q_unigram_surprisal,
-        q_blocklist,
-        q_temperature_mix,
-        q_neardup_best,
-        q_winnow_matches,
-    )
-
-    return {
-        "dedup_incremental": q_dedup_incremental,
-        "semantic_neardup_scaled": q_semantic_neardup_scaled,
-        "contrastive_pairs": q_contrastive_pairs,
-        "perceptron": q_perceptron,
-        "abtt": q_abtt,
-        "pca_power": q_pca_power,
-        "bpe_encode": q_bpe_encode,
-        "bloom_join": q_bloom_join,
-        "benford_check": q_benford_check,
-        "dedup_eval_sampled": q_dedup_eval_sampled,
-        "simhash_neardup": q_simhash_neardup,
-        "winnow_matches": q_winnow_matches,
-        "decontaminate": q_decontaminate,
-        "dsir_select": q_dsir_select,
-        "containment_join": q_containment_join,
-        "modularity": q_modularity,
-        "nb_classify": q_nb_classify,
-        "temporal_split": q_temporal_split,
-        "target_encode": q_target_encode,
-        "column_profile": q_column_profile,
-        "tokenizer_fertility": q_tokenizer_fertility,
-        "substr_dedup": q_substr_dedup,
-        "dup_span_audit": q_dup_span_audit,
-        "json_props": q_json_props,
-        "equidepth_bins": q_equidepth_bins,
-        "zipf_fit": q_zipf_fit,
-        "ks_drift": q_ks_drift,
-        "mutual_info": q_mutual_info,
-        "line_dedup": q_line_dedup,
-        "gopher_rules": q_gopher_rules,
-        # r12 rotation: fifteen never-driver-checked entries in
-        "tokenizer_fertility_unigram": q_tokenizer_fertility_unigram,
-        "semantic_neardup": q_semantic_neardup,
-        "embedding_neardup_scaled": q_embedding_neardup_scaled,
-        "phash_neardup": q_phash_neardup,
-        "cms_freq": q_cms_freq,
-        "hll_distinct": q_hll_distinct,
-        "dup_fraction": q_dup_fraction,
-        "skew_report": q_skew_report,
-        "welch_drift": q_welch_drift,
-        "unigram_surprisal": q_unigram_surprisal,
-        "dsir_auc": q_dsir_auc,
-        "dsir_calibration": q_dsir_calibration,
-        "blocklist": q_blocklist,
-        "temperature_mix": q_temperature_mix,
-        "neardup_best": q_neardup_best,
-    }
-
-
-def _rotated_in_oracles() -> dict[str, str]:
-    from stock_indicators_etl_spark.queries import (
-        SQL_BENFORD_CHECK,
-        SQL_JSON_PROPS,
-        SQL_EQUIDEPTH_BINS,
-        SQL_KS_DRIFT,
-        SQL_BLOOM_JOIN,
-        SQL_COLUMN_PROFILE,
-        SQL_SKEW_REPORT,
-        SQL_TARGET_ENCODE,
-        SQL_TEMPORAL_SPLIT,
-        SQL_WELCH_DRIFT,
-    )
-    from stock_indicators_etl_spark.queries_llm import (
-        SQL_ABTT,
-        SQL_TOKENIZER_FERTILITY,
-        SQL_TOKENIZER_FERTILITY_UNIGRAM,
-        SQL_SUBSTR_DEDUP,
-        SQL_DUP_SPAN_AUDIT,
-        SQL_ZIPF_FIT,
-        SQL_MUTUAL_INFO,
-        SQL_LINE_DEDUP,
-        SQL_GOPHER_RULES,
-        SQL_BPE_ENCODE,
-        SQL_CONTAINMENT_JOIN,
-        SQL_CONTRASTIVE_PAIRS,
-        SQL_DECONTAMINATE,
-        SQL_DEDUP_EVAL_SAMPLED,
-        SQL_DSIR_SELECT,
-        SQL_DSIR_AUC,
-        SQL_DSIR_CALIBRATION,
-        SQL_MODULARITY,
-        SQL_NB_CLASSIFY,
-        SQL_PCA_POWER,
-        SQL_PERCEPTRON,
-        SQL_SIMHASH_NEARDUP,
-        SQL_DEDUP_INCREMENTAL,
-        SQL_SEMANTIC_NEARDUP,
-        SQL_SEMANTIC_NEARDUP_SCALED,
-        SQL_EMBEDDING_NEARDUP_SCALED,
-        SQL_PHASH_NEARDUP,
-        SQL_CMS_FREQ,
-        SQL_HLL_DISTINCT,
-        SQL_DUP_FRACTION,
-        SQL_UNIGRAM_SURPRISAL,
-        SQL_BLOCKLIST,
-        SQL_TEMPERATURE_MIX,
-        SQL_NEARDUP_BEST,
-        SQL_WINNOW_MATCHES,
-    )
-
-    return {
-        "dedup_incremental": SQL_DEDUP_INCREMENTAL,
-        "semantic_neardup_scaled": SQL_SEMANTIC_NEARDUP_SCALED,
-        "contrastive_pairs": SQL_CONTRASTIVE_PAIRS,
-        "perceptron": SQL_PERCEPTRON,
-        "abtt": SQL_ABTT,
-        "pca_power": SQL_PCA_POWER,
-        "bpe_encode": SQL_BPE_ENCODE,
-        "bloom_join": SQL_BLOOM_JOIN,
-        "benford_check": SQL_BENFORD_CHECK,
-        "dedup_eval_sampled": SQL_DEDUP_EVAL_SAMPLED,
-        "simhash_neardup": SQL_SIMHASH_NEARDUP,
-        "winnow_matches": SQL_WINNOW_MATCHES,
-        "decontaminate": SQL_DECONTAMINATE,
-        "dsir_select": SQL_DSIR_SELECT,
-        "containment_join": SQL_CONTAINMENT_JOIN,
-        "modularity": SQL_MODULARITY,
-        "nb_classify": SQL_NB_CLASSIFY,
-        "temporal_split": SQL_TEMPORAL_SPLIT,
-        "target_encode": SQL_TARGET_ENCODE,
-        "column_profile": SQL_COLUMN_PROFILE,
-        "tokenizer_fertility": SQL_TOKENIZER_FERTILITY,
-        "substr_dedup": SQL_SUBSTR_DEDUP,
-        "dup_span_audit": SQL_DUP_SPAN_AUDIT,
-        "json_props": SQL_JSON_PROPS,
-        "equidepth_bins": SQL_EQUIDEPTH_BINS,
-        "zipf_fit": SQL_ZIPF_FIT,
-        "ks_drift": SQL_KS_DRIFT,
-        "mutual_info": SQL_MUTUAL_INFO,
-        "line_dedup": SQL_LINE_DEDUP,
-        "gopher_rules": SQL_GOPHER_RULES,
-        # r12 rotation: fifteen never-driver-checked entries in
-        "tokenizer_fertility_unigram": SQL_TOKENIZER_FERTILITY_UNIGRAM,
-        "semantic_neardup": SQL_SEMANTIC_NEARDUP,
-        "embedding_neardup_scaled": SQL_EMBEDDING_NEARDUP_SCALED,
-        "phash_neardup": SQL_PHASH_NEARDUP,
-        "cms_freq": SQL_CMS_FREQ,
-        "hll_distinct": SQL_HLL_DISTINCT,
-        "dup_fraction": SQL_DUP_FRACTION,
-        "skew_report": SQL_SKEW_REPORT,
-        "welch_drift": SQL_WELCH_DRIFT,
-        "unigram_surprisal": SQL_UNIGRAM_SURPRISAL,
-        "dsir_auc": SQL_DSIR_AUC,
-        "dsir_calibration": SQL_DSIR_CALIBRATION,
-        "blocklist": SQL_BLOCKLIST,
-        "temperature_mix": SQL_TEMPERATURE_MIX,
-        "neardup_best": SQL_NEARDUP_BEST,
-    }
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    q = dict(QUERIES)
-    q.update(QUERIES_LLM)
-    q["indicator_pipeline_grid"] = _q_indicator_pipeline
-    # one combined entry for the four recursive families (W7/W10/W12/
-    # W15): the external harness records at most 50 queries, and r2's
-    # four single-feature entries pushed the registry to 52, leaving
-    # macdfix_hist/adx_family unreported (VERDICT r2 #1). Single-
-    # feature variants remain bit-exact-checkable via
-    # ``extra_queries()`` / ``scripts/check_oracle.py --extras``.
-    q["recursive_family"] = _q_recursive(["rsi", "cmo", "macd", "adx"])
-    for name in ROTATED_OUT:
-        # non-base names (rotated in earlier, out again later) simply
-        # stop being re-added; only base names need the pop
-        q.pop(name, None)
-    q.update(_rotated_in_queries())
-    return {name: _conf_wrapped(fn) for name, fn in q.items()}
+    return {q.name: _conf_wrapped(q.build) for q in REGISTRY.values() if q.driver}
 
 
 def oracle_sql() -> dict[str, str]:
-    from stock_indicators_etl_spark.queries import (
-        SQL_INDICATOR_PIPELINE_GRID,
-        SQL_RECURSIVE_FAMILY,
-    )
-
-    o = {
-        **ORACLES,
-        **ORACLES_LLM,
-        "recursive_family": SQL_RECURSIVE_FAMILY,
-        "indicator_pipeline_grid": SQL_INDICATOR_PIPELINE_GRID,
-    }
-    for name in ROTATED_OUT:
-        o.pop(name, None)
-    o.update(_rotated_in_oracles())
-    return o
+    return {q.name: q.oracle_sql for q in REGISTRY.values() if q.driver}
 
 
 def extra_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Queries NOT registered with the driver (its report caps at 50
     entries) but still bit-exact-checked locally via
-    ``scripts/check_oracle.py --extras``: single-feature recursive
-    variants, the newer extension operators not yet rotated in, and
-    the long-stable entries rotated out (VERDICT r5 #3)."""
-    from stock_indicators_etl_spark.queries import (
-        q_agg_delta,
-        q_cdc_merge,
-        q_corr_matrix,
-        q_pit_join,
-        q_dq_check,
-        q_ols_by_key,
-        q_rolling_robust,
-        q_customer_orders_hist,
-        q_disjunctive_parts,
-        q_distinct_users_cube,
-        q_dormant_customers,
-        q_excess_suppliers,
-        q_exact_median,
-        q_large_orders,
-        q_important_stock,
-        q_market_share,
-        q_min_cost_supplier,
-        q_cross_sectional_rank,
-        q_ntile_buckets,
-        q_order_priority_check,
-        q_pivot_matrix,
-        q_profit_by_nation,
-        q_promo_revenue,
-        q_returned_items,
-        q_rollup_aggregate,
-        q_sales_cube,
-        q_asof_join,
-        q_attribution,
-        q_cusum,
-        q_exact_quantiles,
-        q_funnel,
-        q_histogram_drift,
-        q_interval_join,
-        q_mad_outliers,
-        q_bollinger,
-        q_drawdown,
-        q_kl_drift,
-        q_rolling_beta,
-        q_local_supplier_volume,
-        q_retention,
-        q_forecast_revenue,
-        q_obv,
-        q_shipmode_priority,
-        q_shipping_priority,
-        q_sliding_counts,
-        q_standardize,
-        q_small_qty_revenue,
-        q_snapshot_diff,
-        q_supplier_part_counts,
-        q_top_paths,
-        q_top_supplier,
-        q_twap,
-        q_value_histogram,
-        q_volume_shipping,
-        q_waiting_suppliers,
-        q_scd2_history,
-        q_winsorize,
-        q_winsorize_approx,
-        q_winsorize_hist,
-    )
-    from stock_indicators_etl_spark.queries_llm import (
-        q_pair_budget,
-        q_sq_topk,
-        q_cluster_keywords,
-        q_mix_domains,
-        q_audio_stats,
-        q_bpe_merges,
-        q_balanced_sample,
-        q_bm25_topk,
-        q_chunk_documents,
-        q_collocations,
-        q_curation_funnel,
-        q_bigram_surprisal,
-        q_dedup_eval,
-        q_fuzzy_join,
-        q_ivfpq_topk,
-        q_kmv_distinct,
-        q_kmv_overlap,
-        q_leakage_split,
-        q_pq_topk,
-        q_rrf_fusion,
-        q_span_dedup,
-        q_heavy_hitters,
-        q_pack_sequences,
-        q_tfidf_keywords,
-        q_triangles,
-        q_frequent_ngrams,
-        q_kmeans,
-        q_length_quantiles,
-        q_readability,
-        q_vocab_index,
-        q_weighted_sample,
-        q_winnow_matches,
-        q_canonicalize,
-        q_pagerank,
-        q_kcore,
-        q_label_prop,
-        q_rp_topk,
-        q_ivfsq_topk,
-        q_allpairs_join,
-        q_link_predict,
-        q_multiprobe_lsh,
-        q_ann_eval,
-        q_knn_label,
-    )
-
-    base = dict(QUERIES)
-    base.update(QUERIES_LLM)
-    q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        "rsi_wilder": _q_recursive(["rsi"]),
-        "cmo_wilder": _q_recursive(["cmo"]),
-        "macdfix_hist": _q_recursive(["macd"]),
-        "adx_family": _q_recursive(["adx"]),
-        "shipping_priority": q_shipping_priority,
-        "rollup_aggregate": q_rollup_aggregate,
-        "length_quantiles": q_length_quantiles,
-        "chunk_documents": q_chunk_documents,
-        "weighted_sample": q_weighted_sample,
-        "frequent_ngrams": q_frequent_ngrams,
-        "volume_shipping": q_volume_shipping,
-        "large_orders": q_large_orders,
-        "order_priority_check": q_order_priority_check,
-        "dormant_customers": q_dormant_customers,
-        "winsorize_approx": q_winsorize_approx,
-        "collocations": q_collocations,
-        "bpe_merges": q_bpe_merges,
-        "small_qty_revenue": q_small_qty_revenue,
-        "snapshot_diff": q_snapshot_diff,
-        "waiting_suppliers": q_waiting_suppliers,
-        "returned_items": q_returned_items,
-        "customer_orders_hist": q_customer_orders_hist,
-        "promo_revenue": q_promo_revenue,
-        "disjunctive_parts": q_disjunctive_parts,
-        "market_share": q_market_share,
-        "top_supplier": q_top_supplier,
-        "supplier_part_counts": q_supplier_part_counts,
-        "value_histogram": q_value_histogram,
-        "twap": q_twap,
-        "min_cost_supplier": q_min_cost_supplier,
-        "profit_by_nation": q_profit_by_nation,
-        "important_stock": q_important_stock,
-        "excess_suppliers": q_excess_suppliers,
-        "pivot_matrix": q_pivot_matrix,
-        "ntile_buckets": q_ntile_buckets,
-        "top_paths": q_top_paths,
-        "curation_funnel": q_curation_funnel,
-        "sliding_counts": q_sliding_counts,
-        "attribution": q_attribution,
-        "standardize": q_standardize,
-        "vocab_index": q_vocab_index,
-        "sales_cube": q_sales_cube,
-        "exact_median": q_exact_median,
-        "winsorize_hist": q_winsorize_hist,
-        "distinct_users_cube": q_distinct_users_cube,
-        "funnel": q_funnel,
-        "retention": q_retention,
-        "asof_join": q_asof_join,
-        "interval_join": q_interval_join,
-        "forecast_revenue": q_forecast_revenue,
-        "shipmode_priority": q_shipmode_priority,
-        "obv": q_obv,
-        "readability": q_readability,
-        "balanced_sample": q_balanced_sample,
-        "bm25_topk": q_bm25_topk,
-        "kmeans": q_kmeans,
-        "cross_sectional_rank": q_cross_sectional_rank,
-        # r8 rotation: formerly rotated-in names back to extras (base
-        # names rotated out this round — corpus_prep /
-        # neardup_components / neardup_survivors / ivf_topk — re-enter
-        # via the ROTATED_OUT loop below)
-        "fuzzy_join": q_fuzzy_join,
-        "heavy_hitters": q_heavy_hitters,
-        "pack_sequences": q_pack_sequences,
-        "audio_stats": q_audio_stats,
-        "tfidf_keywords": q_tfidf_keywords,
-        "winsorize": q_winsorize,
-        # r9 rotation: formerly rotated-in names back to extras (the
-        # exact dedup_eval harness stays the sf0.01-tier check; the
-        # sampled form took its registry slot)
-        "span_dedup": q_span_dedup,
-        "leakage_split": q_leakage_split,
-        "pq_topk": q_pq_topk,
-        "ivfpq_topk": q_ivfpq_topk,
-        "scd2_history": q_scd2_history,
-        "dedup_eval": q_dedup_eval,
-        # (the r9/r9b/r11 new-operator names formerly here —
-        # cms_freq / phash_neardup / temperature_mix / blocklist /
-        # dsir_auc / dsir_calibration / skew_report / welch_drift /
-        # dup_fraction / tokenizer_fertility_unigram, plus
-        # semantic_neardup / unigram_surprisal /
-        # embedding_neardup_scaled / neardup_best / hll_distinct
-        # above — rotated IN in r12)
-        "local_supplier_volume": q_local_supplier_volume,
-        # r10 rotation: formerly rotated-in names back to extras
-        # (dedup_exact re-enters via the ROTATED_OUT base loop below)
-        "mad_outliers": q_mad_outliers,
-        "triangles": q_triangles,
-        "kmv_distinct": q_kmv_distinct,
-        "kmv_overlap": q_kmv_overlap,
-        "rrf_fusion": q_rrf_fusion,
-        "bigram_surprisal": q_bigram_surprisal,
-        "cusum": q_cusum,
-        "histogram_drift": q_histogram_drift,
-        "exact_quantiles": q_exact_quantiles,
-        # r11 rotation: formerly rotated-in names back to extras
-        "dq_check": q_dq_check,
-        "ols_by_key": q_ols_by_key,
-        "cluster_keywords": q_cluster_keywords,
-        "cdc_merge": q_cdc_merge,
-        "mix_domains": q_mix_domains,
-        "rolling_robust": q_rolling_robust,
-        "corr_matrix": q_corr_matrix,
-        "pit_join": q_pit_join,
-        "agg_delta": q_agg_delta,
-        "sq_topk": q_sq_topk,
-        # r12 rotation: formerly rotated-in names back to extras
-        # (each left the hard signal after 3-4 straight green checks)
-        "canonicalize": q_canonicalize,
-        "pagerank": q_pagerank,
-        "kcore": q_kcore,
-        "label_prop": q_label_prop,
-        "rp_topk": q_rp_topk,
-        "ivfsq_topk": q_ivfsq_topk,
-        "allpairs_join": q_allpairs_join,
-        "link_predict": q_link_predict,
-        "multiprobe_lsh": q_multiprobe_lsh,
-        "ann_eval": q_ann_eval,
-        "knn_label": q_knn_label,
-        "drawdown": q_drawdown,
-        "rolling_beta": q_rolling_beta,
-        "kl_drift": q_kl_drift,
-        "bollinger": q_bollinger,
-        # r12 new operator: self-join pair-budget preflight (the
-        # measure-before-submit report generalized from this round's
-        # wedge preflight; VERDICT r11 wrong #1's missing artifact)
-        "pair_budget": q_pair_budget,
+    ``scripts/check_oracle.py --extras``."""
+    return {
+        q.name: _conf_wrapped(q.build) for q in REGISTRY.values() if not q.driver
     }
-    for name in ROTATED_OUT:
-        if name in base:  # non-base rotated-out names are added above
-            q[name] = base[name]
-    return {name: _conf_wrapped(fn) for name, fn in q.items()}
 
 
 def extra_oracle_sql() -> dict[str, str]:
-    from stock_indicators_etl_spark.queries import (
-        SQL_AGG_DELTA,
-        SQL_CDC_MERGE,
-        SQL_CORR_MATRIX,
-        SQL_PIT_JOIN,
-        SQL_DQ_CHECK,
-        SQL_OLS_BY_KEY,
-        SQL_ROLLING_ROBUST,
-        SQL_ADX_FAMILY,
-        SQL_ASOF_JOIN,
-        SQL_ATTRIBUTION,
-        SQL_CMO_WILDER,
-        SQL_CUSUM,
-        SQL_EXACT_QUANTILES,
-        SQL_FORECAST_REVENUE,
-        SQL_FUNNEL,
-        SQL_HISTOGRAM_DRIFT,
-        SQL_INTERVAL_JOIN,
-        SQL_MAD_OUTLIERS,
-        SQL_BOLLINGER,
-        SQL_DRAWDOWN,
-        SQL_KL_DRIFT,
-        SQL_ROLLING_BETA,
-        SQL_LOCAL_SUPPLIER_VOLUME,
-        SQL_OBV,
-        SQL_RETENTION,
-        SQL_SHIPMODE_PRIORITY,
-        SQL_CUSTOMER_ORDERS_HIST,
-        SQL_DISJUNCTIVE_PARTS,
-        SQL_DISTINCT_USERS_CUBE,
-        SQL_DORMANT_CUSTOMERS,
-        SQL_EXACT_MEDIAN,
-        SQL_EXCESS_SUPPLIERS,
-        SQL_LARGE_ORDERS,
-        SQL_MACDFIX_HIST,
-        SQL_IMPORTANT_STOCK,
-        SQL_MARKET_SHARE,
-        SQL_MIN_COST_SUPPLIER,
-        SQL_NTILE_BUCKETS,
-        SQL_CROSS_SECTIONAL_RANK,
-        SQL_ORDER_PRIORITY_CHECK,
-        SQL_PIVOT_MATRIX,
-        SQL_PROFIT_BY_NATION,
-        SQL_PROMO_REVENUE,
-        SQL_RETURNED_ITEMS,
-        SQL_ROLLUP_AGGREGATE,
-        SQL_RSI_WILDER,
-        SQL_SALES_CUBE,
-        SQL_SCD2_HISTORY,
-        SQL_SHIPPING_PRIORITY,
-        SQL_SLIDING_COUNTS,
-        SQL_SMALL_QTY_REVENUE,
-        SQL_STANDARDIZE,
-        SQL_SNAPSHOT_DIFF,
-        SQL_SUPPLIER_PART_COUNTS,
-        SQL_TOP_PATHS,
-        SQL_TOP_SUPPLIER,
-        SQL_TWAP,
-        SQL_VALUE_HISTOGRAM,
-        SQL_VOLUME_SHIPPING,
-        SQL_WAITING_SUPPLIERS,
-        SQL_WINSORIZE,
-        SQL_WINSORIZE_APPROX,
-        SQL_WINSORIZE_HIST,
-    )
-    from stock_indicators_etl_spark.queries_llm import (
-        SQL_PAIR_BUDGET,
-        SQL_SQ_TOPK,
-        SQL_CLUSTER_KEYWORDS,
-        SQL_MIX_DOMAINS,
-        SQL_AUDIO_STATS,
-        SQL_BIGRAM_SURPRISAL,
-        SQL_BPE_MERGES,
-        SQL_BALANCED_SAMPLE,
-        SQL_BM25_TOPK,
-        SQL_CHUNK_DOCUMENTS,
-        SQL_COLLOCATIONS,
-        SQL_CURATION_FUNNEL,
-        SQL_DEDUP_EVAL,
-        SQL_FREQUENT_NGRAMS,
-        SQL_FUZZY_JOIN,
-        SQL_HEAVY_HITTERS,
-        SQL_IVFPQ_TOPK,
-        SQL_KMEANS,
-        SQL_KMV_DISTINCT,
-        SQL_KMV_OVERLAP,
-        SQL_LEAKAGE_SPLIT,
-        SQL_LENGTH_QUANTILES,
-        SQL_PACK_SEQUENCES,
-        SQL_PQ_TOPK,
-        SQL_RRF_FUSION,
-        SQL_SPAN_DEDUP,
-        SQL_TFIDF_KEYWORDS,
-        SQL_TRIANGLES,
-        SQL_READABILITY,
-        SQL_VOCAB_INDEX,
-        SQL_WEIGHTED_SAMPLE,
-        SQL_CANONICALIZE,
-        SQL_PAGERANK,
-        SQL_KCORE,
-        SQL_LABEL_PROP,
-        SQL_RP_TOPK,
-        SQL_IVFSQ_TOPK,
-        SQL_ALLPAIRS_JOIN,
-        SQL_LINK_PREDICT,
-        SQL_MULTIPROBE_LSH,
-        SQL_ANN_EVAL,
-        SQL_KNN_LABEL,
-    )
-
-    o = {
-        "rsi_wilder": SQL_RSI_WILDER,
-        "cmo_wilder": SQL_CMO_WILDER,
-        "macdfix_hist": SQL_MACDFIX_HIST,
-        "adx_family": SQL_ADX_FAMILY,
-        "shipping_priority": SQL_SHIPPING_PRIORITY,
-        "rollup_aggregate": SQL_ROLLUP_AGGREGATE,
-        "length_quantiles": SQL_LENGTH_QUANTILES,
-        "chunk_documents": SQL_CHUNK_DOCUMENTS,
-        "weighted_sample": SQL_WEIGHTED_SAMPLE,
-        "frequent_ngrams": SQL_FREQUENT_NGRAMS,
-        "volume_shipping": SQL_VOLUME_SHIPPING,
-        "large_orders": SQL_LARGE_ORDERS,
-        "order_priority_check": SQL_ORDER_PRIORITY_CHECK,
-        "dormant_customers": SQL_DORMANT_CUSTOMERS,
-        "winsorize_approx": SQL_WINSORIZE_APPROX,
-        "collocations": SQL_COLLOCATIONS,
-        "bpe_merges": SQL_BPE_MERGES,
-        "small_qty_revenue": SQL_SMALL_QTY_REVENUE,
-        "snapshot_diff": SQL_SNAPSHOT_DIFF,
-        "waiting_suppliers": SQL_WAITING_SUPPLIERS,
-        "returned_items": SQL_RETURNED_ITEMS,
-        "customer_orders_hist": SQL_CUSTOMER_ORDERS_HIST,
-        "promo_revenue": SQL_PROMO_REVENUE,
-        "disjunctive_parts": SQL_DISJUNCTIVE_PARTS,
-        "market_share": SQL_MARKET_SHARE,
-        "top_supplier": SQL_TOP_SUPPLIER,
-        "supplier_part_counts": SQL_SUPPLIER_PART_COUNTS,
-        "value_histogram": SQL_VALUE_HISTOGRAM,
-        "twap": SQL_TWAP,
-        "min_cost_supplier": SQL_MIN_COST_SUPPLIER,
-        "profit_by_nation": SQL_PROFIT_BY_NATION,
-        "important_stock": SQL_IMPORTANT_STOCK,
-        "excess_suppliers": SQL_EXCESS_SUPPLIERS,
-        "pivot_matrix": SQL_PIVOT_MATRIX,
-        "ntile_buckets": SQL_NTILE_BUCKETS,
-        "top_paths": SQL_TOP_PATHS,
-        "curation_funnel": SQL_CURATION_FUNNEL,
-        "sliding_counts": SQL_SLIDING_COUNTS,
-        "attribution": SQL_ATTRIBUTION,
-        "standardize": SQL_STANDARDIZE,
-        "vocab_index": SQL_VOCAB_INDEX,
-        "sales_cube": SQL_SALES_CUBE,
-        "exact_median": SQL_EXACT_MEDIAN,
-        "winsorize_hist": SQL_WINSORIZE_HIST,
-        "distinct_users_cube": SQL_DISTINCT_USERS_CUBE,
-        "funnel": SQL_FUNNEL,
-        "retention": SQL_RETENTION,
-        "asof_join": SQL_ASOF_JOIN,
-        "interval_join": SQL_INTERVAL_JOIN,
-        "forecast_revenue": SQL_FORECAST_REVENUE,
-        "shipmode_priority": SQL_SHIPMODE_PRIORITY,
-        "obv": SQL_OBV,
-        "readability": SQL_READABILITY,
-        "balanced_sample": SQL_BALANCED_SAMPLE,
-        "bm25_topk": SQL_BM25_TOPK,
-        "kmeans": SQL_KMEANS,
-        "cross_sectional_rank": SQL_CROSS_SECTIONAL_RANK,
-        # r8 rotation: formerly rotated-in names back to extras
-        "fuzzy_join": SQL_FUZZY_JOIN,
-        "heavy_hitters": SQL_HEAVY_HITTERS,
-        "pack_sequences": SQL_PACK_SEQUENCES,
-        "audio_stats": SQL_AUDIO_STATS,
-        "tfidf_keywords": SQL_TFIDF_KEYWORDS,
-        "winsorize": SQL_WINSORIZE,
-        # r9 rotation: formerly rotated-in names back to extras
-        "span_dedup": SQL_SPAN_DEDUP,
-        "leakage_split": SQL_LEAKAGE_SPLIT,
-        "pq_topk": SQL_PQ_TOPK,
-        "ivfpq_topk": SQL_IVFPQ_TOPK,
-        "scd2_history": SQL_SCD2_HISTORY,
-        "dedup_eval": SQL_DEDUP_EVAL,
-        # (the r9/r9b/r11 new-operator names formerly here rotated IN
-        # in r12 — see _rotated_in_oracles)
-        "local_supplier_volume": SQL_LOCAL_SUPPLIER_VOLUME,
-        # r10 rotation: formerly rotated-in names back to extras
-        "mad_outliers": SQL_MAD_OUTLIERS,
-        "triangles": SQL_TRIANGLES,
-        "kmv_distinct": SQL_KMV_DISTINCT,
-        "kmv_overlap": SQL_KMV_OVERLAP,
-        "rrf_fusion": SQL_RRF_FUSION,
-        "bigram_surprisal": SQL_BIGRAM_SURPRISAL,
-        "cusum": SQL_CUSUM,
-        "histogram_drift": SQL_HISTOGRAM_DRIFT,
-        "exact_quantiles": SQL_EXACT_QUANTILES,
-        # r11 rotation: formerly rotated-in names back to extras
-        "dq_check": SQL_DQ_CHECK,
-        "ols_by_key": SQL_OLS_BY_KEY,
-        "cluster_keywords": SQL_CLUSTER_KEYWORDS,
-        "cdc_merge": SQL_CDC_MERGE,
-        "mix_domains": SQL_MIX_DOMAINS,
-        "rolling_robust": SQL_ROLLING_ROBUST,
-        "corr_matrix": SQL_CORR_MATRIX,
-        "pit_join": SQL_PIT_JOIN,
-        "agg_delta": SQL_AGG_DELTA,
-        "sq_topk": SQL_SQ_TOPK,
-        # r12 rotation: formerly rotated-in names back to extras
-        "canonicalize": SQL_CANONICALIZE,
-        "pagerank": SQL_PAGERANK,
-        "kcore": SQL_KCORE,
-        "label_prop": SQL_LABEL_PROP,
-        "rp_topk": SQL_RP_TOPK,
-        "ivfsq_topk": SQL_IVFSQ_TOPK,
-        "allpairs_join": SQL_ALLPAIRS_JOIN,
-        "link_predict": SQL_LINK_PREDICT,
-        "multiprobe_lsh": SQL_MULTIPROBE_LSH,
-        "ann_eval": SQL_ANN_EVAL,
-        "knn_label": SQL_KNN_LABEL,
-        "drawdown": SQL_DRAWDOWN,
-        "rolling_beta": SQL_ROLLING_BETA,
-        "kl_drift": SQL_KL_DRIFT,
-        "bollinger": SQL_BOLLINGER,
-        # r12 new operator
-        "pair_budget": SQL_PAIR_BUDGET,
-    }
-    base = {**ORACLES, **ORACLES_LLM}
-    for name in ROTATED_OUT:
-        if name in base:
-            o[name] = base[name]
-    return o
+    return {q.name: q.oracle_sql for q in REGISTRY.values() if not q.driver}

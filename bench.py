@@ -23,97 +23,14 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from stock_indicators_etl_spark.session import get_spark  # noqa: E402
 
-# queries that must be rebuilt inside the timed section: ones with
-# eager construction work (connected components' fixpoint loop, IVF's
-# centroid-sample collect) — a prebuilt handle would exclude that work
-# — and ones whose plan persists an intermediate (dedup_pipeline's
-# candidates): clearCache drops the persist registration, so a reused
-# handle would recompute the candidate lineage once per consumer
-# instead of caching it. Shared with scripts/scaling_sweep.py (ADVICE
-# r2: the sweep's EAGER set had drifted from this one).
-EAGER_CONSTRUCTION = frozenset(
-    {
-        "neardup_components",
-        "neardup_survivors",
-        "ivf_topk",
-        # same centroid/codebook sample collects at construction as
-        # ivf_topk — rebuild inside the timed section for honest totals
-        "pq_topk",
-        "ivfpq_topk",
-        "ivfsq_topk",
-        "dedup_pipeline",
-        # the Lloyd iteration collects per-round centroid updates at
-        # construction — that IS the operator's work and must sit
-        # inside the timed section
-        "kmeans",
-        "semantic_neardup",
-        "semantic_neardup_scaled",
-        "semdedup_production",
-        # per-round 1-row argmax collects at construction — that IS
-        # the training loop's sequential dependency
-        "bpe_merges",
-        # builds a temp index + runs two shard increments at
-        # construction — that IS the operator's work
-        "dedup_incremental",
-        # runs the near-dup components fixpoint at construction
-        "leakage_split",
-        # persist the kNN edge list / LSH candidate pairs at
-        # construction (six consumers each) — rebuild per timed run so
-        # the persist work is inside the measurement
-        "link_predict",
-        "contrastive_pairs",
-        # per-epoch localCheckpoint(eager) runs the 5 training epochs
-        # at construction — that IS the trainer's work
-        "perceptron",
-        # localCheckpoint(eager=False) pins each iteration's ranks:
-        # a reused handle would time the cache, not the iteration
-        "pagerank",
-        # the peel loop materializes degrees + probes convergence at
-        # construction — that IS the operator's work
-        "kcore",
-        # pins the doubled edge list eagerly before the label rounds
-        "label_prop",
-        # r8: bloom filter words / BPE merge argmaxes / power-iteration
-        # rounds all collect at construction — that IS the operator
-        "bloom_join",
-        "bpe_encode",
-        # r10: trains the BPE merges at construction (same argmax
-        # collects as bpe_encode) before the fertility aggregate
-        "tokenizer_fertility",
-        "pca_power",
-        "abtt",
-        # r9: sizes the LSH blocking from a corpus count at
-        # construction (sweep-only entry)
-        "embedding_neardup_production",
-        # r9b: LPA labels + canonical edges localCheckpoint(eager) at
-        # construction — that IS the community+modularity work
-        "modularity",
-        # r9b: NB training collects the k class totals + vocab size
-        # at construction — that IS the (one-pass) trainer
-        "nb_classify",
-    }
-)
-
-# HOF-heavy queries that need a second warm run for JIT tiering
-# (measured 2-4x on the dedup family).
-HEAVY_WARM = frozenset(
-    {"minhash_lsh_candidates", "ngram_jaccard", "ngram_jaccard_capped",
-     "dedup_pipeline", "neardup_components", "neardup_survivors", "simhash",
-     "embedding_neardup", "ivf_topk", "indicator_pipeline_grid",
-     "pipeline_wilder", "recursive_family", "ngram_containment",
-     "repetition_score", "corpus_prep", "semantic_neardup", "kmeans",
-     "bm25_topk", "unigram_surprisal", "shipping_priority",
-     "dedup_incremental"}
-)
-
-
-def _timed_min(spark, sf_dir: str, name: str, fn, df) -> float:
+def _timed_min(spark, sf_dir: str, fn, df, eager: bool) -> float:
     """Steady state = MIN of two timed runs: single-run timings on
     this single-JVM suite swing multi-second on GC / JIT noise;
     min-of-k isolates the actual plan cost without hiding any real
     work (each timed run is still a full cold execution — see
     clearCache below). If the two runs disagree by >1.4× the noise is
-    live right now — take a third."""
+    live right now — take a third. ``eager`` queries (see
+    ``queries.Query``) are rebuilt inside every timed run."""
     import gc as _gc
 
     runs: list[float] = []
@@ -128,7 +45,7 @@ def _timed_min(spark, sf_dir: str, name: str, fn, df) -> float:
         _gc.collect()
         spark.sparkContext._jvm.System.gc()
         t0 = time.perf_counter()
-        if name in EAGER_CONSTRUCTION:
+        if eager:
             df = fn(spark, sf_dir)
         df.write.mode("overwrite").format("noop").save()
         runs.append(time.perf_counter() - t0)
@@ -139,14 +56,14 @@ def _timed_min(spark, sf_dir: str, name: str, fn, df) -> float:
     return min(runs)
 
 
-def _retime_handle(spark, sf_dir: str, name: str, fn):
+def _retime_handle(spark, sf_dir: str, fn, eager: bool):
     """DataFrame handle for an outlier re-time, matching the main
     loop's protocol (ADVICE r10): eager-construction queries rebuild
     INSIDE ``_timed_min``, so an outer ``fn()`` here would run a full
     build whose result is discarded — return None instead; non-eager
     queries get one untimed warm (noop) save before timing, exactly
     like the main loop's warm pass."""
-    if name in EAGER_CONSTRUCTION:
+    if eager:
         return None
     df = fn(spark, sf_dir)
     df.write.mode("overwrite").format("noop").save()
@@ -263,23 +180,11 @@ def run() -> None:
     import __spark_entry__ as entry_mod
 
     spark = get_spark(app_name="bench")
-    queries = entry_mod.queries()
-
-    # bench EVERY driver query (VERDICT r2 #4: cover the whole green
-    # surface) — the registry itself is the headline list, so a new
-    # queries() entry is automatically benchmarked. The extras
-    # registry (oracle-checked via check_oracle.py --extras; kept off
-    # the driver's 50-entry report) is benchmarked too, EXCEPT the
-    # four single-feature recursive variants whose kernels already run
-    # inside recursive_family — re-timing subsets of the same fused
-    # mapInPandas stage would quadruple suite time without measuring
-    # new work.
-    if hasattr(entry_mod, "extra_queries"):
-        _dup_kernels = {"rsi_wilder", "cmo_wilder", "macdfix_hist", "adx_family"}
-        for _name, _fn in entry_mod.extra_queries().items():
-            if _name not in queries and _name not in _dup_kernels:
-                queries[_name] = _fn
-    headline = list(queries)
+    registry = entry_mod.REGISTRY
+    # bench EVERY driver query and every extra (VERDICT r2 #4: cover
+    # the whole green surface), minus the records marked bench=False
+    queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
+    headline = [n for n in queries if registry[n].bench]
     if only is not None:
         missing = only - set(headline)
         if missing:
@@ -288,22 +193,13 @@ def run() -> None:
 
     timings: dict[str, float] = {}
     for name in headline:
-        fn = queries.get(name)
-        if fn is None:
-            continue
+        fn, q = queries[name], registry[name]
         df = fn(spark, sf_dir)
         # warm runs: the first pays I/O cache + codegen; HOF-heavy
-        # queries get a second so the JIT finishes tiering. One warm
-        # suffices elsewhere and keeps total suite wall time bounded.
-        df.write.mode("overwrite").format("noop").save()
-        if name in HEAVY_WARM:
+        # queries get a second so the JIT finishes tiering
+        for _ in range(q.warm):
             df.write.mode("overwrite").format("noop").save()
-        # steady state = MIN of two timed runs: single-run timings on
-        # this 37-query single-JVM suite swing multi-second on GC /
-        # JIT noise; min-of-k isolates the actual plan cost without
-        # hiding any real work (each timed run is still a full cold
-        # execution — see clearCache below)
-        timings[name] = round(_timed_min(spark, sf_dir, name, fn, df), 4)
+        timings[name] = round(_timed_min(spark, sf_dir, fn, df, q.eager), 4)
 
     if only is not None:
         print(
@@ -352,9 +248,9 @@ def run() -> None:
         ref = sorted(vals)
         med = ref[(len(ref) - 1) // 2]
         if med > 0.05 and timings[name] > 1.4 * med:
-            fn = queries[name]
-            df = _retime_handle(spark, sf_dir, name, fn)
-            fresh = _timed_min(spark, sf_dir, name, fn, df)
+            fn, eager = queries[name], registry[name].eager
+            df = _retime_handle(spark, sf_dir, fn, eager)
+            fresh = _timed_min(spark, sf_dir, fn, df, eager)
             new = round(min(timings[name], fresh), 4)
             retimed[name] = {
                 "was": timings[name],

@@ -36,14 +36,11 @@ def main() -> int:
         "appear).",
         "",
     ]
-    registry = entry_mod.queries()
-    # include the oracle-checked extras (minus the single-feature
-    # recursive variants — same fused stage as recursive_family)
-    _dup_kernels = {"rsi_wilder", "cmo_wilder", "macdfix_hist", "adx_family"}
-    for name, fn in entry_mod.extra_queries().items():
-        if name not in registry and name not in _dup_kernels:
-            registry[name] = fn
-    for name, fn in registry.items():
+    # every benched query: driver surface, then the oracle-checked extras
+    queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
+    for name, fn in queries.items():
+        if not entry_mod.REGISTRY[name].bench:
+            continue
         # canonical plans: an earlier query's persisted lineage would
         # otherwise substitute InMemoryTableScan into later plans
         spark.catalog.clearCache()

@@ -1,14 +1,20 @@
 #!/usr/bin/env python
-"""Per-query forensic profile: wall seconds, Spark JOB count, stage
-and task counts, for named queries (guide §1: measure first; the
+"""Per-query forensic profile of named queries: wall seconds, Spark
+job / stage / task counts, and the per-stage table (executor run time,
+stage wall time, tasks, shuffle read/write bytes, stage name) — the
 job-accounting method that found the dedup_incremental and perceptron
-constants). Timing protocol mirrors bench.py (warm noop save, then a
-timed cold run with clearCache + GC), but each timed run executes in
-its own job group so the status tracker attributes every job to the
-query being measured.
+constants, plus the stage table where the time actually shows up.
+
+Timing protocol mirrors bench.py (warm noop save, then timed cold
+runs with clearCache + GC; eager queries rebuild inside the timed
+section). Each timed run executes in its own job group; afterwards the
+listener bus is drained and every stage of the group's jobs is read
+from Spark's live status store over py4j, so the UI stays off.
 
 Usage: python scripts/profile_queries.py <query> [query ...]
-       [--sf=/root/testdata/sf0.1] [--runs=2] [--explain]
+       [--sf=SF_DIR] [--runs=2] [--top=25] [--explain]
+
+``SF_DIR`` defaults to the sf0.1 test data.
 
 ``--explain`` additionally writes plans/r12/<query>_profile.txt with
 the formatted plan of the RETURNED frame (eager-construction queries
@@ -29,9 +35,46 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 from stock_indicators_etl_spark.session import get_spark  # noqa: E402
 
 
+def stage_rows(sc, group: str) -> tuple[int, list[dict]]:
+    """(job count, one row per stage that ran) for a job group."""
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    tracker = sc.statusTracker()
+    job_ids = tracker.getJobIdsForGroup(group)
+    seen: set[int] = set()
+    rows = []
+    for jid in job_ids:
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            if sid in seen:
+                continue
+            seen.add(sid)
+            s = store.lastStageAttempt(sid)
+            if s.status().toString() == "SKIPPED":
+                continue
+            sub, comp = s.submissionTime(), s.completionTime()
+            wall = None
+            if sub.isDefined() and comp.isDefined():
+                wall = (comp.get().getTime() - sub.get().getTime()) / 1e3
+            rows.append(
+                {
+                    "id": sid,
+                    "tasks": s.numTasks(),
+                    "run_s": round(s.executorRunTime() / 1e3, 3),
+                    "wall_s": wall,
+                    "shuf_r_mb": round(s.shuffleReadBytes() / 2**20, 2),
+                    "shuf_w_mb": round(s.shuffleWriteBytes() / 2**20, 2),
+                    "name": s.name()[:80],
+                }
+            )
+    return len(job_ids), rows
+
+
 def main() -> int:
     sf_dir = "/root/testdata/sf0.1"
     runs = 2
+    top = 25
     explain = False
     names: list[str] = []
     for a in sys.argv[1:]:
@@ -39,59 +82,57 @@ def main() -> int:
             sf_dir = a.split("=", 1)[1]
         elif a.startswith("--runs="):
             runs = int(a.split("=", 1)[1])
+        elif a.startswith("--top="):
+            top = int(a.split("=", 1)[1])
         elif a == "--explain":
             explain = True
         else:
             names.append(a)
 
     import __spark_entry__ as entry_mod
-    from bench import EAGER_CONSTRUCTION
 
     spark = get_spark(app_name="profile")
-    queries = entry_mod.queries()
-    for n, fn in entry_mod.extra_queries().items():
-        queries.setdefault(n, fn)
+    queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
 
     sc = spark.sparkContext
-    tracker = sc.statusTracker()
     out: dict[str, dict] = {}
     for name in names:
-        fn = queries[name]
+        fn, eager = queries[name], entry_mod.REGISTRY[name].eager
         df = fn(spark, sf_dir)
         df.write.mode("overwrite").format("noop").save()  # warm
-        best = None
-        for r in range(runs):
+        best = best_rows = None
+        for run in range(runs):
             spark.catalog.clearCache()
             gc.collect()
             sc._jvm.System.gc()
-            group = f"prof_{name}_{r}"
+            group = f"prof_{name}_{run}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
-            d = fn(spark, sf_dir) if name in EAGER_CONSTRUCTION else df
+            d = fn(spark, sf_dir) if eager else df
             d.write.mode("overwrite").format("noop").save()
             wall = time.perf_counter() - t0
-            sc.setJobGroup(None, None)
-            job_ids = tracker.getJobIdsForGroup(group)
-            n_stages = n_tasks = 0
-            for jid in job_ids:
-                ji = tracker.getJobInfo(jid)
-                if ji is None:
-                    continue
-                for sid in ji.stageIds:
-                    si = tracker.getStageInfo(sid)
-                    if si is not None and si.numCompletedTasks > 0:
-                        n_stages += 1
-                        n_tasks += si.numCompletedTasks
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            n_jobs, rows = stage_rows(sc, group)
             rec = {
                 "wall": round(wall, 3),
-                "jobs": len(job_ids),
-                "stages_run": n_stages,
-                "tasks": n_tasks,
+                "jobs": n_jobs,
+                "stages_run": len(rows),
+                "tasks": sum(r["tasks"] for r in rows),
+                "stage_wall_s": round(sum(r["wall_s"] or 0 for r in rows), 3),
+                "stage_run_s": round(sum(r["run_s"] for r in rows), 3),
             }
             if best is None or rec["wall"] < best["wall"]:
-                best = rec
+                best, best_rows = rec, rows
         out[name] = best
         print(json.dumps({name: best}), flush=True)
+        best_rows.sort(key=lambda r: -(r["wall_s"] or r["run_s"]))
+        for r in best_rows[:top]:
+            print(
+                f"  {r['id']:>6} tasks={r['tasks']:<4} wall={r['wall_s']!s:<8}"
+                f" run={r['run_s']:<8} sr={r['shuf_r_mb']:<8}"
+                f" sw={r['shuf_w_mb']:<8} {r['name']}"
+            )
         if explain:
             import contextlib
             import io

@@ -20,6 +20,33 @@ from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from stock_indicators_etl_spark.queries_llm import (  # noqa: E402
+    q_embedding_neardup_production,
+    q_semdedup_production,
+)
+
+#: sweep-only builders: no bit-exact oracle by design (order-free float
+#: sums), so they live outside the registry. Both are eager: they size
+#: their blocking from the corpus at construction, so every timed run
+#: rebuilds them.
+SWEEP_ONLY = {
+    "semdedup_production": q_semdedup_production,
+    "embedding_neardup_production": q_embedding_neardup_production,
+}
+
+
+def sweep_queries(entry_mod) -> dict:
+    """name → (builder, eager) for every registry query plus the
+    sweep-only builders."""
+    reg = entry_mod.REGISTRY
+    out = {
+        name: (fn, reg[name].eager)
+        for name, fn in {**entry_mod.queries(), **entry_mod.extra_queries()}.items()
+    }
+    out.update({name: (fn, True) for name, fn in SWEEP_ONLY.items()})
+    return out
+
+
 SFS = [
     ("/root/testdata/sf0.001", 0.001),
     ("/root/testdata/sf0.01", 0.01),
@@ -259,26 +286,10 @@ def main() -> int:
     out_path = args[0] if args else "SCALING.md"
 
     import __spark_entry__ as entry_mod
-    # the eager/rebuild set is bench.py's — it had drifted (ADVICE r2:
-    # dedup_pipeline's persist needs a rebuild per timed run here too)
-    from bench import EAGER_CONSTRUCTION
     from stock_indicators_etl_spark.session import get_spark
 
     spark = get_spark(app_name="scaling_sweep")
-    queries = entry_mod.queries()
-    for _name, _fn in entry_mod.extra_queries().items():
-        queries.setdefault(_name, _fn)
-    # sweep-only entries: no bit-exact oracle by design (order-free
-    # float sums), so they live outside the registry/extras contract
-    from stock_indicators_etl_spark.queries_llm import (
-        q_embedding_neardup_production,
-        q_semdedup_production,
-    )
-
-    queries.setdefault("semdedup_production", q_semdedup_production)
-    queries.setdefault(
-        "embedding_neardup_production", q_embedding_neardup_production
-    )
+    queries = sweep_queries(entry_mod)
 
     have_sf1 = Path(SF1_DIR, "documents.parquet").exists()
     if not have_sf1:
@@ -322,7 +333,7 @@ def main() -> int:
     no_sf1: list[str] = []
     run_list = [n for n in QUERIES if only is None or n in only]
     for name in run_list:
-        fn = queries[name]
+        fn, eager = queries[name]
         times: list[float | None] = []
         sf_dirs = [d for d, _ in SFS]
         if have_sf1 and name not in SF1_SKIP:
@@ -347,7 +358,7 @@ def main() -> int:
                 for _ in range(2):
                     spark.catalog.clearCache()
                     t0 = time.perf_counter()
-                    d = fn(spark, sf_dir) if name in EAGER_CONSTRUCTION else df
+                    d = fn(spark, sf_dir) if eager else df
                     d.write.mode("overwrite").format("noop").save()
                     dt = time.perf_counter() - t0
                     best = dt if best is None else min(best, dt)

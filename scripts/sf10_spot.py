@@ -127,22 +127,13 @@ SINGLE_RUN = {"perceptron"}
 #: where N grows ×10 but duplicate-cluster sizes are pinned at sf0.1's
 #: — the direct test of the r10 triage's "bounded clusters ⇒ linear"
 DIR_OVERRIDES = {
-    "dedup_eval_sampled_fixed": (
+    f"{base}_fixed": (
         str(ROOT / "testdata_sf1_fixed"),
         str(ROOT / "testdata_sf10_fixed"),
-    ),
-    "winnow_matches_fixed": (
-        str(ROOT / "testdata_sf1_fixed"),
-        str(ROOT / "testdata_sf10_fixed"),
-    ),
-    "contrastive_pairs_fixed": (
-        str(ROOT / "testdata_sf1_fixed"),
-        str(ROOT / "testdata_sf10_fixed"),
-    ),
-    "triangles_fixed": (
-        str(ROOT / "testdata_sf1_fixed"),
-        str(ROOT / "testdata_sf10_fixed"),
-    ),
+    )
+    for base in (
+        "dedup_eval_sampled", "winnow_matches", "contrastive_pairs", "triangles"
+    )
 }
 
 
@@ -176,29 +167,15 @@ def main() -> int:
             only = set(a.split("=", 1)[1].split(","))
     out_path = args[0] if args else str(ROOT / "SCALING_SF10.md")
     import __spark_entry__ as entry_mod
-    from bench import EAGER_CONSTRUCTION
-    from stock_indicators_etl_spark.queries_llm import (
-        q_embedding_neardup_production,
-        q_semdedup_production,
-    )
+    from scaling_sweep import sweep_queries
     from stock_indicators_etl_spark.session import get_spark
 
     spark = get_spark(app_name="sf10_spot")
-    queries = entry_mod.queries()
-    for _name, _fn in entry_mod.extra_queries().items():
-        queries.setdefault(_name, _fn)
-    queries.setdefault("semdedup_production", q_semdedup_production)
-    queries.setdefault(
-        "embedding_neardup_production", q_embedding_neardup_production
-    )
-    queries.setdefault(
-        "dedup_eval_sampled_fixed", queries["dedup_eval_sampled"]
-    )
-    queries.setdefault("winnow_matches_fixed", queries["winnow_matches"])
-    queries.setdefault(
-        "contrastive_pairs_fixed", queries["contrastive_pairs"]
-    )
-    queries.setdefault("triangles_fixed", queries["triangles"])
+    queries = sweep_queries(entry_mod)
+    # _fixed fixture variants share their base query's builder and
+    # construction protocol
+    for name in DIR_OVERRIDES:
+        queries.setdefault(name, queries[name.removesuffix("_fixed")])
 
     for d in (SF1_DIR, SF10_DIR):
         if not Path(d, "documents.parquet").exists():
@@ -209,7 +186,7 @@ def main() -> int:
         _parse_existing(out_path) if only else {}
     )
     for name in [n for n in QUERIES if only is None or n in only]:
-        fn = queries[name]
+        fn, eager = queries[name]
         times: list[float | None] = []
         for sf_dir in DIR_OVERRIDES.get(name, (SF1_DIR, SF10_DIR)):
             try:
@@ -227,9 +204,6 @@ def main() -> int:
                 for _ in range(2):
                     spark.catalog.clearCache()
                     t0 = time.perf_counter()
-                    # _fixed fixture variants share their base
-                    # query's construction protocol
-                    eager = name.removesuffix("_fixed") in EAGER_CONSTRUCTION
                     d = fn(spark, sf_dir) if eager else df
                     d.write.mode("overwrite").format("noop").save()
                     best_c = time.perf_counter() - t0

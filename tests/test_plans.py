@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 import pandas as pd
 import pytest
@@ -28,8 +29,6 @@ def plan_of(df) -> str:
 
 def count_nodes(plan: str, name: str) -> int:
     """Count physical-plan nodes by their detail header '(N) <name>'."""
-    import re
-
     return len(re.findall(rf"^\(\d+\) {name}\b", plan, flags=re.M))
 
 
@@ -175,7 +174,6 @@ def test_simhash_single_narrow_shuffle(spark):
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     plan = plan_of(simhash_fingerprints(docs))
-    import re
 
     # formatted mode lists each Exchange's partitioning on its own
     # Arguments line; _spread's RoundRobin fan-out is allowed, but
@@ -287,7 +285,6 @@ def test_rollup_is_one_expand_one_shuffle(spark):
 
     plan = plan_of(q_rollup_aggregate(spark, SF_DIR))
     assert count_nodes(plan, "Expand") == 1
-    import re
 
     hash_exchanges = len(re.findall(r"^Arguments: hashpartitioning", plan, flags=re.M))
     assert hash_exchanges == 1
@@ -629,8 +626,6 @@ def _indent(line: str) -> int:
 
 
 def _node_detail(plan: str, nid: str) -> str:
-    import re
-
     m = re.search(
         rf"^\({nid}\) .*?(?=^\(\d+\) |\Z)", plan, flags=re.M | re.S
     )
@@ -647,8 +642,6 @@ def _subtrees(
     from the subtree (the node itself stays) — e.g. stop at
     ``InMemoryRelation`` so a cached frame's build lineage is not
     attributed to the operator that merely scans the cache."""
-    import re
-
     lines = _tree_lines(plan)
     res = []
     for idx, line in enumerate(lines):
@@ -717,9 +710,7 @@ def test_contrastive_rank_no_corpus_global_sort(spark):
     import __spark_entry__ as entry_mod
 
     spark.catalog.clearCache()
-    qs = entry_mod.queries()  # rotated into the registry in r8
-    qs.update(entry_mod.extra_queries())
-    plan = plan_of(qs["contrastive_pairs"](spark, SF_DIR))
+    plan = plan_of(entry_mod.REGISTRY["contrastive_pairs"].build(spark, SF_DIR))
     subs = _subtrees(
         plan, "Exchange", detail_filter=lambda d: "SinglePartition" in d
     )
@@ -742,11 +733,7 @@ def test_golden_plan_fingerprint(spark, name):
     # the CacheManager would substitute InMemoryTableScan into these
     # plans and shift the node counts
     spark.catalog.clearCache()
-    qs = entry_mod.queries()
-    if name not in qs:
-        for n, f in entry_mod.extra_queries().items():
-            qs.setdefault(n, f)
-    got = plan_fingerprint(plan_of(qs[name](spark, SF_DIR)))
+    got = plan_fingerprint(plan_of(entry_mod.REGISTRY[name].build(spark, SF_DIR)))
     assert got == GOLDEN_FINGERPRINTS[name], (
         f"{name}: plan fingerprint drifted (regenerate PLANS.md and, if "
         f"the new plan is intentional, update GOLDEN_FINGERPRINTS)\n"

@@ -157,8 +157,8 @@ WHERE cum >= greatest(1, (q * nn + 999999) // 1000000)
 
 
 class TestBenchStampHygiene:
-    def _stamp(self, path, round_no, idx, git_rev, queries):
-        d = {"queries": queries}
+    def _stamp(self, path, round_no, idx, git_rev, queries, cpus="32"):
+        d = {"queries": queries, "cpus": cpus}
         if git_rev is not None:
             d["git_rev"] = git_rev
         (path / f"BENCHFULL_r{round_no:02d}_2026{idx:04d}Z.json").write_text(
@@ -169,21 +169,23 @@ class TestBenchStampHygiene:
         """ADVICE r10: a stamp from a superseded mid-round revision
         (e.g. pre-order-fix bpe_encode) must not contribute to the
         'noise-free floor' — only same-revision stamps fold in, and
-        pre-r11 stamps without a git_rev field are excluded."""
+        pre-r11 stamps without a git_rev field are excluded. Stamps
+        taken at another core count never fold either."""
         import bench
 
         self._stamp(tmp_path, 11, 1, "aaa", {"q1": 1.0})
         self._stamp(tmp_path, 11, 2, "bbb", {"q1": 0.1})  # other rev
         self._stamp(tmp_path, 11, 3, None, {"q1": 0.2})  # legacy format
         self._stamp(tmp_path, 11, 4, "aaa", {"q1": 0.9})
-        got = bench._prior_stamp_timings(tmp_path, 11, "aaa")
+        self._stamp(tmp_path, 11, 5, "aaa", {"q1": 0.3}, cpus="8")
+        got = bench._prior_stamp_timings(tmp_path, 11, "aaa", "32")
         assert got == {"q1": [1.0, 0.9]}
 
     def test_no_rev_folds_nothing(self, tmp_path):
         import bench
 
         self._stamp(tmp_path, 11, 1, "aaa", {"q1": 1.0})
-        assert bench._prior_stamp_timings(tmp_path, 11, "") == {}
+        assert bench._prior_stamp_timings(tmp_path, 11, "", "32") == {}
 
     def test_current_file_is_rev_stamped(self):
         """run() writes git_rev into the BENCHFULL dict (structural:
@@ -198,14 +200,15 @@ class TestBenchRetimeProtocol:
     def test_eager_names_skip_outer_build(self, spark):
         """ADVICE r10: the retime pass must not run a full discarded
         eager build — _timed_min rebuilds inside for these names."""
+        import __spark_entry__ as entry_mod
         import bench
 
-        name = next(iter(bench.EAGER_CONSTRUCTION))
+        q = next(q for q in entry_mod.REGISTRY.values() if q.eager)
 
         def boom(*_a):  # the outer build must NOT be invoked
             raise AssertionError("eager retime must not pre-build")
 
-        assert bench._retime_handle(spark, "unused", name, boom) is None
+        assert bench._retime_handle(spark, "unused", boom, q.eager) is None
 
     def test_non_eager_gets_warm_save(self, spark):
         import bench
@@ -216,5 +219,5 @@ class TestBenchRetimeProtocol:
             calls.append(1)
             return s.range(3)
 
-        df = bench._retime_handle(spark, "unused", "not_an_eager_name", fn)
+        df = bench._retime_handle(spark, "unused", fn, eager=False)
         assert df is not None and calls == [1]

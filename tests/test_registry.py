@@ -30,30 +30,23 @@ def test_registry_is_at_the_driver_cap_with_oracles():
     assert not set(xq) & set(q)
 
 
-def test_rotation_invariants():
-    """Full rotation contract (VERDICT r10 next #7), previously
-    verified by an ad-hoc per-round script: a bad rotation must fail
-    the suite, not the driver."""
+def test_registry_contract():
+    """One record per query: the driver surface is exactly the 50
+    records marked ``driver=True``, every record carries a real
+    oracle, and the two surfaces partition the registry."""
+    from stock_indicators_etl_spark.queries import RECORDS
+    from stock_indicators_etl_spark.queries_llm import RECORDS_LLM
+
     e = _entry()
-    q = set(e.queries())
-    xq = set(e.extra_queries())
-    # a name can appear in at most one of the two rotation tuples
-    assert not set(e.ROTATED_IN) & set(e.ROTATED_OUT)
-    assert len(set(e.ROTATED_IN)) == len(e.ROTATED_IN)  # no duplicates
-    assert len(set(e.ROTATED_OUT)) == len(e.ROTATED_OUT)
-    # ROTATED_IN is the historical log: a name rotated in and later
-    # back out moves to extras — every logged name must still be
-    # covered on ONE of the two surfaces, never dropped
-    assert set(e.ROTATED_IN) <= q | xq, set(e.ROTATED_IN) - (q | xq)
-    # the LIVE rotated-in set (the override dict) must sit in the
-    # hard-signal registry in full
-    assert set(e._rotated_in_queries()) <= q
-    assert set(e._rotated_in_queries()) == set(e._rotated_in_oracles())
-    # every rotated-out name keeps bit-exact coverage via extras
-    assert set(e.ROTATED_OUT) <= xq, set(e.ROTATED_OUT) - xq
-    # every entry on both surfaces is oracle-backed by a real SQL text
-    for name, sql in {**e.oracle_sql(), **e.extra_oracle_sql()}.items():
-        assert isinstance(sql, str) and sql.strip(), name
+    names = [q.name for q in (*RECORDS, *RECORDS_LLM)]
+    assert len(names) == len(set(names)), "duplicate record names"
+    assert set(names) == set(e.REGISTRY)
+    assert sum(q.driver for q in e.REGISTRY.values()) == 50
+    for q in e.REGISTRY.values():
+        assert isinstance(q.oracle_sql, str) and q.oracle_sql.strip(), q.name
+    q, xq = set(e.queries()), set(e.extra_queries())
+    assert not q & xq
+    assert q | xq == set(names)
 
 
 @pytest.mark.parametrize("which", ["main", "extras"])

@@ -162,3 +162,14 @@ def test_link_prediction_hub_vertex_bounded(spark):
     # spokes 1 and 2 are adjacent -> must not be predicted
     assert not ((got.u == 1) & (got.v == 2)).any()
     assert (got.cn >= 1).all()
+
+
+def test_band_salt_count_keeps_salt_past_the_size_cap():
+    """A key-space deficit always salts: a banded stream estimated
+    above 1 GiB caps the salt at 2 instead of dropping it to 1."""
+    from stock_indicators_etl_spark.llmdata.similarity import band_salt_count
+
+    assert band_salt_count(200, 16, 2 << 30) == 2
+    assert band_salt_count(200, 16, 0) == 50  # unknown estimate: uncapped
+    assert band_salt_count(200, 16, 1 << 26) == 16  # 1 GiB / 64 MiB
+    assert band_salt_count(8, 16, 2 << 30) == 1  # no deficit, no salt
