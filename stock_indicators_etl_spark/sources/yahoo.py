@@ -5,8 +5,10 @@ The reference downloads sequentially in 10-ticker chunks
 (``data_download_yahoo.py:80-102``) and melts yfinance's
 (ticker, field) column MultiIndex to long rows (P4, ``:27-64``).
 Spark-side the melt disappears (we build long format directly) and the
-chunks fan out as a ``mapInPandas`` over a ticker-chunk DataFrame, so
-a cluster parallelizes the network fetches.
+chunks are packed into one ``mapInPandas`` task per core slot, each
+fetching its contiguous run of chunks in order, so a cluster
+parallelizes the network fetches without paying a Python task per
+chunk (DESIGN.md §4.32).
 
 ``yfinance`` is not installed in this environment — the fetch function
 is injectable and the default raises with a clear message. A
@@ -122,22 +124,30 @@ def download_bars(
     """Distributed chunked download (E1).
 
     Chunks of ``chunk_size`` tickers (F8, ``stockdata/utils.py:89-107``)
-    are distributed one-per-partition; each partition fetches its
-    chunk inside ``mapInPandas`` — the cluster parallelizes what the
-    reference does sequentially. End date is exclusive next-day (F7,
-    ``data_download_yahoo.py:70-73``).
+    are packed into ``min(n_chunks, defaultParallelism)`` tasks over
+    ``spark.range``, with no shuffle: each task calls ``fetch_fn`` once
+    per chunk of its contiguous slice, in order, so every call gets
+    exactly one chunk and each core slot has at most one fetch in
+    flight. The cluster parallelizes what the reference does
+    sequentially; one Python task per slot rather than per chunk
+    avoids a fixed per-task cost (DESIGN.md §4.32), at the price that
+    a slow chunk delays the later chunks of its task. End date is
+    exclusive next-day (F7, ``data_download_yahoo.py:70-73``). No
+    tickers → an empty frame.
     """
     end_date = (
         datetime.fromisoformat(execution_date) + timedelta(days=1)
     ).strftime("%Y-%m-%d")
     chunks = [tickers[i : i + chunk_size] for i in range(0, len(tickers), chunk_size)]
-    chunk_df = spark.createDataFrame(
-        [(",".join(c),) for c in chunks], ["tickers"]
-    ).repartition(max(len(chunks), 1))
+    if not chunks:
+        return spark.createDataFrame([], BARS_SCHEMA)
+    n_tasks = min(len(chunks), spark.sparkContext.defaultParallelism)
 
-    def fetch_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fetch_slice(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for b in batches:
-            for tick_str in b["tickers"]:
-                yield fetch_fn(tick_str.split(","), execution_date, end_date, interval)
+            for i in b["id"].tolist():
+                yield fetch_fn(chunks[i], execution_date, end_date, interval)
 
-    return chunk_df.mapInPandas(fetch_partition, schema=BARS_SCHEMA)
+    return spark.range(len(chunks), numPartitions=n_tasks).mapInPandas(
+        fetch_slice, schema=BARS_SCHEMA
+    )

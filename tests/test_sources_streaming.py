@@ -21,7 +21,7 @@ from stock_indicators_etl_spark.sources.io import (
     read_ticker_csv,
     write_bars_day,
 )
-from stock_indicators_etl_spark.sources.yahoo import download_bars, synthetic_fetch
+from stock_indicators_etl_spark.sources.yahoo import BARS_SCHEMA, download_bars, synthetic_fetch
 from stock_indicators_etl_spark.streaming.sessions import (
     streaming_ohlcv_rollup,
     streaming_sessionize,
@@ -80,6 +80,34 @@ def test_download_bars_synthetic(spark):
         pdf.sort_values(["ticker", "window_start"]).reset_index(drop=True),
         pdf2.sort_values(["ticker", "window_start"]).reset_index(drop=True),
     )
+
+
+def test_download_bars_packs_chunks_into_slot_tasks(spark):
+    tickers = [f"T{i:03d}" for i in range(80)]
+    chunks = [tickers[i : i + 3] for i in range(0, 80, 3)]
+    assert len(chunks) == 27
+
+    def recording_fetch(ticks, start, end, interval):
+        # one row per call, naming the chunk the call received
+        row = dict.fromkeys(BARS_SCHEMA.fieldNames(), 0.0)
+        return pd.DataFrame([{**row, "ticker": "|".join(ticks), "window_start": 0}])
+
+    out = download_bars(spark, tickers, "2024-01-02", "1m", chunk_size=3, fetch_fn=recording_fetch)
+    assert out.rdd.getNumPartitions() == min(len(chunks), spark.sparkContext.defaultParallelism)
+    assert "Exchange" not in out._jdf.queryExecution().executedPlan().toString()
+    calls = [r.ticker for r in out.collect()]
+    # each call got exactly one original chunk, tickers in order; every
+    # chunk fetched once, and the slices keep the chunk order
+    assert calls == ["|".join(c) for c in chunks]
+
+
+def test_download_bars_no_tickers_is_empty(spark):
+    def never_fetch(ticks, start, end, interval):
+        raise AssertionError("no chunk to fetch")
+
+    out = download_bars(spark, [], "2024-01-02", "1m", fetch_fn=never_fetch)
+    assert out.schema == BARS_SCHEMA
+    assert out.count() == 0
 
 
 @pytest.fixture()
