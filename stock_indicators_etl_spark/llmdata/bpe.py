@@ -28,8 +28,8 @@ aggregation — never the corpus; everything else is scan-local:
 At 100 TB: the per-round shuffle carries one row per distinct
 (pair, word) — bounded by vocabulary × average word length, not by
 corpus size; the collected state is one (left, right, count) row per
-round. Plan depth grows one ``replace`` per round;
-``checkpoint_every`` bounds it for long merge schedules.
+round. Plan depth grows one ``replace`` per round; a checkpoint every
+``_CHECKPOINT_EVERY`` rounds bounds it for long merge schedules.
 """
 
 from __future__ import annotations
@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 #: end-of-word marker (Sennrich et al.) — distinguishes "est</w>"
 #: (word-final) from "est" (prefix); never a character of any word.
 EOW = "</w>"
+_CHECKPOINT_EVERY = 16
 
 
 def _symbolize(word_col):
@@ -89,7 +90,6 @@ def bpe_train(
     docs: DataFrame,
     n_merges: int = 8,
     text_col: str = "text",
-    checkpoint_every: int = 16,
 ) -> DataFrame:
     """Learn ``n_merges`` BPE merges over the corpus; returns the
     merge table ``(step, left, right, pair_count)`` in learning
@@ -125,7 +125,7 @@ def bpe_train(
                     F.lit(f" {left}{right} "),
                 ),
             )
-            if checkpoint_every and step % checkpoint_every == 0:
+            if step % _CHECKPOINT_EVERY == 0:
                 cur = cur.localCheckpoint()
     finally:
         # the mutated lineage still reads wt; pin the learned rows

@@ -14,9 +14,12 @@ program with a DuckDB-portable formulation:
   verification over band-blocked candidates.
 - **embedding cosine** near-dup: see ``similarity.py``.
 - **connected components** over verified near-dup pairs
-  (:func:`connected_components`): min-label propagation to a unique
-  fixpoint — the step that turns pairwise matches into dedup groups
-  and survivors.
+  (:func:`connected_components`): min-label propagation or
+  large-star/small-star to a unique fixpoint — the step that turns
+  pairwise matches into dedup groups and survivors. Both rounds run
+  through ``operators.graph.converge``: one lazy ``localCheckpoint``
+  per round, materialised by the one-row checksum that is the
+  round's only action.
 
 Portable-hash note: Spark ``hash()`` ≠ DuckDB ``hash()``, so all
 hashing goes through md5 — minhashes compare *hex strings*
@@ -1055,33 +1058,11 @@ def ngram_containment(
 # ---------------------------------------------------------------------------
 
 
-def _edge_checksum(df: DataFrame, cols: tuple[str, str]) -> object:
-    """Type-agnostic one-row probe: sum of xxhash64 over the rows.
-    Equal sums across rounds ⇒ unchanged set up to a ~2^-64 collision
-    (the iteration is deterministic and monotone, so no oscillation).
-    decimal(38,0) accumulator — a plain long sum would overflow;
-    coalesce(0) keeps an empty set at a stable non-NULL checksum."""
-    a, b = cols
-    return df.agg(
-        F.coalesce(
-            F.sum(F.xxhash64(F.col(a), F.col(b)).cast("decimal(38,0)")),
-            F.lit(0).cast("decimal(38,0)"),
-        ).alias("s")
-    ).collect()[0]["s"]
-
-
-def _cc_star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
-    """Large-star/small-star connected components (Kiveris et al.,
-    "Connected Components in MapReduce and Beyond", SoCC'14): the
-    O(log² n)-round alternative to min-label propagation for graphs
-    with long chains, where per-round cost stays O(E) but the round
-    count is poly-log in the component diameter instead of linear.
-
-    ``edges``: canonical undirected pairs (u > v, no self-loops,
-    distinct). Returns (_id, component) for every edge endpoint,
-    component = min id of the connected component.
-
-    Each round is two window-aggregate passes (one shuffle each):
+def _star_round(edges: DataFrame) -> DataFrame:
+    """One large-star/small-star round (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14) over canonical
+    undirected pairs ``(u > v)``: two window-aggregate passes, one
+    shuffle each.
 
     - **large-star** attaches every neighbor larger than ``a`` to
       ``min(Γ(a) ∪ {a})`` — halves long chains by pointer doubling;
@@ -1093,88 +1074,27 @@ def _cc_star_labels(edges: DataFrame, max_iter: int) -> DataFrame:
     decreases monotonically, so an unchanged edge checksum means the
     fixpoint, not an oscillation.
     """
-    from pyspark.sql import Window
-
-    edges = edges.localCheckpoint(eager=True)
-    prev = None
-    converged = False
-    for _ in range(max_iter):
-        # large-star over the bidirectional view
-        bi = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
-            edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
-        )
-        m = F.least(F.col("a"), F.min("b").over(Window.partitionBy("a")))
-        ls = (
-            bi.withColumn("m", m)
-            .filter(F.col("b") > F.col("a"))
-            .select(F.col("b").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star on the (u > v)-oriented result
-        m2 = F.min("v").over(Window.partitionBy("u"))
-        sp = ls.withColumn("m", m2)
-        edges = (
-            sp.select(F.col("v").alias("x"), F.col("m"))
-            .unionByName(sp.select(F.col("u").alias("x"), F.col("m")))
-            .filter(F.col("x") != F.col("m"))
-            .select(F.greatest("x", "m").alias("u"), F.least("x", "m").alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        cur = _edge_checksum(edges, ("u", "v"))
-        if prev is not None and cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"connected_components(method='star') did not reach the fixpoint "
-            f"within max_iter={max_iter} rounds; raise max_iter"
-        )
-    # star edges: (leaf u → center v); centers label themselves
-    return edges.select(F.col("u").alias("_id"), F.col("v").alias("component")).unionByName(
-        edges.select(F.col("v").alias("_id"), F.col("v").alias("component"))
-    ).distinct()
-
-
-class _PinLedger:
-    """Unpersist schedule for iterative pin-per-round loops.
-
-    Encodes the ADVICE-r11 rule as a testable policy: a persisted
-    round frame may only be released once a frame WITHOUT cache
-    lineage (a materialized ``localCheckpoint``) supersedes it,
-    because ``unpersist`` clears the buffers of every cached plan
-    still embedding the released plan as a subtree — releasing the
-    previous persist round right after pinning the current one (the
-    pre-r12 behavior) therefore invalidated the cache the next
-    iteration was about to read. Releases come newest-first so no
-    surviving pin ever embeds a released subtree.
-    """
-
-    def __init__(self) -> None:
-        self._pending: list = []
-
-    def pin(self, frame, released_by_this_pin: bool) -> list:
-        """Record this round's pinned frame; return the frames that
-        are now safe to unpersist (newest-first, possibly empty).
-
-        ``released_by_this_pin=True`` means ``frame`` is (about to be)
-        a materialized checkpoint with no cache lineage — every older
-        pending pin becomes releasable. ``False`` means ``frame`` is a
-        plain ``persist()`` whose plan embeds the previous pins; they
-        all stay pinned.
-        """
-        if released_by_this_pin:
-            stale = list(reversed(self._pending))
-            self._pending = []
-            return stale
-        self._pending.append(frame)
-        return []
-
-    @property
-    def still_pinned(self) -> list:
-        return list(self._pending)
+    # large-star over the bidirectional view
+    bi = edges.select(F.col("u").alias("a"), F.col("v").alias("b")).unionByName(
+        edges.select(F.col("v").alias("a"), F.col("u").alias("b"))
+    )
+    m = F.least(F.col("a"), F.min("b").over(Window.partitionBy("a")))
+    ls = (
+        bi.withColumn("m", m)
+        .filter(F.col("b") > F.col("a"))
+        .select(F.col("b").alias("u"), F.col("m").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .distinct()
+    )
+    # small-star on the (u > v)-oriented result
+    sp = ls.withColumn("m", F.min("v").over(Window.partitionBy("u")))
+    return (
+        sp.select(F.col("v").alias("x"), F.col("m"))
+        .unionByName(sp.select(F.col("u").alias("x"), F.col("m")))
+        .filter(F.col("x") != F.col("m"))
+        .select(F.greatest("x", "m").alias("u"), F.least("x", "m").alias("v"))
+        .distinct()
+    )
 
 
 def connected_components(
@@ -1186,48 +1106,43 @@ def connected_components(
     max_iter: int = 50,
     method: str = "label",
 ) -> DataFrame:
-    """Connected components by min-label propagation: every vertex
-    ends up labeled with the smallest ``id`` in its component — the
-    canonical form of "group near-duplicates, keep one".
+    """Connected components: every vertex ends up labeled with the
+    smallest ``id`` in its component — the canonical form of "group
+    near-duplicates, keep one".
 
     Output: (``id_col``, ``component``). Vertices with no edges are
     their own singleton component. The fixpoint is unique, so the
     result is deterministic regardless of execution order (and
     SQL-replayable with a recursive CTE).
 
-    Scale shape: only the subgraph actually touched by edges iterates
-    — vertices with no edges are singleton components by definition
-    and never enter the loop, so per-round cost is O(E), independent
-    of corpus size (a near-dup edge set is a sliver of the corpus).
-    Each round is one equi-join of the pinned edge list against the
-    active label table plus one map-side-combinable min-groupBy,
-    rounds bounded by the largest component's diameter (dedup
-    components are clique-ish, so typically 2-3). Labels are pinned
-    each round — ``persist()`` on ordinary rounds with the
-    convergence probe as the materializing action, a lazy
-    ``localCheckpoint`` every third round to truncate the iterative
-    lineage — so each round costs ONE job, not two (use
-    ``setCheckpointDir`` + ``checkpoint()`` on a real cluster for
-    fault tolerance). The driver-side loop holds no data —
-    the convergence probe is a one-row type-agnostic checksum
-    aggregate (sum of xxhash64 over the label rows; the id set is
-    fixed across rounds, so an unchanged sum means unchanged labels up
-    to a ~2^-64 collision). Stale round pins are released only at
-    checkpoint rounds (:class:`_PinLedger`, ADVICE r11) — at most
-    three small ``(id, component)`` tables are pinned at once, and up
-    to three may remain pinned at convergence (the returned frame's
-    own cache chain; the session's LRU store evicts them under
-    pressure).
+    Both methods pin the edge list once and then run their round
+    through :func:`~stock_indicators_etl_spark.operators.graph.converge`:
+    each round's state is a lazy ``localCheckpoint`` and a one-row
+    xxhash64 checksum over it is the round's only action (it also
+    materialises the pin), so no data is collected, plan depth
+    stays one round and nothing is left in the session cache. An
+    unchanged checksum is the fixpoint; a budget of ``max_iter``
+    rounds that runs out raises ``RuntimeError`` instead of returning
+    mid-propagation labels (which would silently split components).
 
-    ``method="star"`` switches to large-star/small-star
-    (:func:`_cc_star_labels`, Kiveris et al.) — O(log²) rounds instead
-    of O(diameter), the right trade for long-chain graphs at extreme
-    scale; identical output contract (property-tested equal on random
-    graphs). Default stays min-label: near-dup components are
-    clique-ish (diameter 2-3), where the simpler per-round plan wins.
+    ``method="label"`` (default): min-label propagation over the
+    subgraph touched by edges — vertices with no edges never enter
+    the loop, so per-round cost is O(E), independent of corpus size.
+    A round is ``labels ∪ (edges ⋈ labels)`` → min component by
+    ``_id``: one equi-join plus one map-side-combinable groupBy.
+    Rounds ≈ the largest component's diameter; near-dup components
+    are clique-ish (diameter 2-3).
+
+    ``method="star"``: large-star/small-star (:func:`_star_round`,
+    Kiveris et al.) — O(log²) rounds instead of O(diameter), the right
+    trade for long-chain graphs; identical output contract
+    (property-tested equal on random graphs).
     """
+    from stock_indicators_etl_spark.operators.graph import converge
+
     if method not in ("label", "star"):
         raise ValueError(f"method must be 'label' or 'star', got {method!r}")
+    what = (f"connected_components(method={method!r})", "max_iter")
     if method == "star":
         canon = (
             edges.select(
@@ -1236,115 +1151,44 @@ def connected_components(
             )
             .filter(F.col("u") != F.col("v"))
             .distinct()
+            .localCheckpoint(eager=True)
         )
-        labels = _cc_star_labels(canon, max_iter)
-        v = vertices.select(F.col(id_col).alias("_id"))
-        return v.join(labels, "_id", "left").select(
-            F.col("_id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("_id")).alias("component"),
+        star = converge(canon, _star_round, ("u", "v"), max_iter, what)
+        # star edges: (leaf u → center v); centers label themselves
+        labels = star.select(
+            F.col("u").alias("_id"), F.col("v").alias("component")
+        ).unionByName(
+            star.select(F.col("v").alias("_id"), F.col("v").alias("component"))
+        ).distinct()
+    else:
+        # pin the edge list before iterating: it is joined once per
+        # round, and an unpinned edge lineage (e.g. the whole
+        # LSH→Jaccard verify chain) would recompute in EVERY round
+        e = edges.select(
+            F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
+        ).unionByName(
+            edges.select(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d"))
+        ).localCheckpoint(eager=True)
+
+        def label_round(labels: DataFrame) -> DataFrame:
+            msgs = e.join(labels, e["_s"] == labels["_id"]).select(
+                F.col("_d").alias("_id"), "component"
+            )
+            return (
+                labels.unionByName(msgs)
+                .groupBy("_id")
+                .agg(F.min("component").alias("component"))
+            )
+
+        # iterate ONLY over edge endpoints; everything else is a singleton
+        start = e.select(F.col("_s").alias("_id")).distinct().select(
+            "_id", F.col("_id").alias("component")
         )
-    e = edges.select(
-        F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
-    ).unionByName(
-        edges.select(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d"))
-    )
-    # pin the edge list before iterating: it is joined once per round,
-    # and an unpinned edge lineage (e.g. the whole LSH→Jaccard verify
-    # chain) would recompute in EVERY round
-    e = e.localCheckpoint(eager=True)
-    # iterate ONLY over edge endpoints; everything else is a singleton
-    labels = e.select(F.col("_s").alias("_id")).distinct().select(
-        "_id", F.col("_id").alias("component")
-    )
-    prev_sum = None
-    converged = False
-    ledger = _PinLedger()
-    for _it in range(max_iter):
-        msgs = (
-            e.join(labels, e["_s"] == labels["_id"])
-            .select(F.col("_d").alias("_id"), "component")
-        )
-        labels = (
-            labels.unionByName(msgs)
-            .groupBy("_id")
-            .agg(F.min("component").alias("component"))
-        )
-        # lineage control, one job per round (VERDICT r10 next #2):
-        # r9's unconditional localCheckpoint(eager=True) spent an
-        # extra materialization job EVERY round on top of the
-        # convergence probe — a pure per-round constant. Instead the
-        # probe's one-row aggregate is the materializing action:
-        # persist() on ordinary rounds, a LAZY localCheckpoint every
-        # third round so the nested logical plan never grows past
-        # three rounds deep (the probe collect right below computes
-        # and saves it in the same job). Near-dup components are
-        # clique-ish (diameter 2-3), so the common case runs entirely
-        # on the cheap persist path.
-        is_ckpt_round = (_it + 1) % 3 == 0
-        if is_ckpt_round:
-            labels = labels.localCheckpoint(eager=False)
-        else:
-            labels = labels.persist()
-        # convergence probe: one single-row aggregation over
-        # checkpointed data per round, instead of an anti-join (which
-        # would shuffle both sides every round). xxhash64 over the
-        # (_id, component) pair is TYPE-AGNOSTIC — string doc_ids are
-        # common in real corpora, and the previous decimal(38,0) cast
-        # would NULL out on them under non-ANSI SQL, making the
-        # checksum None==None "converge" after one round (ADVICE r2).
-        # The label multiset changes ⇒ the hash-sum changes except
-        # with ~2^-64 collision probability; the id set itself is
-        # fixed across rounds, so equal sums ⇒ unchanged labels.
-        # decimal(38,0) accumulator: a plain long sum of 2^63-range
-        # hashes overflows (an error under ANSI mode, silent wrap
-        # otherwise); the cast is long->decimal so it can never NULL.
-        # coalesce: an empty label table (no edges at all) must yield a
-        # stable checksum (0), not NULL -> None, so it still converges
-        cur_sum = labels.agg(
-            F.coalesce(
-                F.sum(
-                    F.xxhash64(F.col("_id"), F.col("component")).cast(
-                        "decimal(38,0)"
-                    )
-                ),
-                F.lit(0).cast("decimal(38,0)"),
-            ).alias("s")
-        ).collect()[0]["s"]
-        # Release older pins ONLY at checkpoint rounds (ADVICE r11):
-        # Spark's unpersist is non-cascading but INVALIDATING — it
-        # lazily re-caches (i.e. clears the buffers of) every cached
-        # plan that still contains the unpersisted plan as a logical
-        # subtree, and on persist rounds the just-materialized current
-        # cache is exactly such a dependent, so an eager unpersist here
-        # forced the next probe to recompute back to the last
-        # checkpoint. A materialized localCheckpoint is a LogicalRDD
-        # with no cache lineage, so right after a checkpoint round's
-        # probe every older persist-round frame can go — newest-first,
-        # so no surviving entry ever embeds an unpersisted subtree.
-        # Footprint: ≤ 3 small (id, component) tables instead of 1.
-        for stale in ledger.pin(labels, released_by_this_pin=is_ckpt_round):
-            stale.unpersist()
-        if prev_sum is not None and cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
-    if not converged:
-        # returning mid-propagation labels would silently split real
-        # components (duplicate "canonical" docs downstream) — fail
-        # loudly instead; chains longer than max_iter need a bigger
-        # budget or the large-star/small-star formulation
-        raise RuntimeError(
-            f"connected_components did not reach the fixpoint within "
-            f"max_iter={max_iter} rounds (component diameter exceeds the "
-            f"budget); raise max_iter or use an O(log^2)-round variant"
-        )
+        labels = converge(start, label_round, ("_id", "component"), max_iter, what)
     v = vertices.select(F.col(id_col).alias("_id"))
-    return (
-        v.join(labels, "_id", "left")
-        .select(
-            F.col("_id").alias(id_col),
-            F.coalesce(F.col("component"), F.col("_id")).alias("component"),
-        )
+    return v.join(labels, "_id", "left").select(
+        F.col("_id").alias(id_col),
+        F.coalesce(F.col("component"), F.col("_id")).alias("component"),
     )
 
 

@@ -1,4 +1,4 @@
-"""Graph propagation operators beyond connected components.
+"""Graph propagation operators and the one fixpoint loop.
 
 North-star surface (reference N/A; complements
 ``llmdata.dedup.connected_components`` — CC answers "which group",
@@ -6,6 +6,12 @@ PageRank answers "how central within the graph"). The dedup use:
 rank documents by centrality of the near-dup candidate graph — hub
 documents (templates every page copies) rank high and are the ones a
 curation pass should inspect.
+
+Every loop that stops on its own (:func:`kcore`, both methods of
+``connected_components``) runs through :func:`converge`, whose round
+is a lazy ``localCheckpoint`` of the new state plus a one-row
+checksum that both materialises it and decides convergence: plan
+depth stays one round and nothing lands in the session cache.
 
 :func:`pagerank` is the FIXED-POINT INTEGER variant: ranks live in
 ``scale`` units, every step is integer arithmetic
@@ -17,19 +23,62 @@ irrelevant for ranking, essential for cross-engine exactness.
 
 Plan per iteration: one equi-join of the (pinned) degree-annotated
 edge list against the current ranks + one combinable groupBy(dst).
-Unlike CC (whose driver-side convergence probes re-evaluate the
-lineage), the rank lineage here is LINEAR — each iteration reads the
-previous ranks exactly once — so intermediate checkpoints are not
-needed for correctness; ``checkpoint_every`` (default 8) bounds plan
+The rank lineage is LINEAR — each iteration reads the previous ranks
+exactly once — so intermediate checkpoints are not needed for
+correctness; one every ``_PR_CHECKPOINT_EVERY`` rounds bounds plan
 depth for long runs while short runs compile to ONE job.
 """
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 PR_SCALE = 10**12
+_PR_CHECKPOINT_EVERY = 8
+_LPA_CHECKPOINT_EVERY = 4
+
+
+def converge(
+    state: DataFrame,
+    step: Callable[[DataFrame], DataFrame],
+    cols: tuple[str, str],
+    max_iter: int,
+    what: tuple[str, str],
+) -> DataFrame:
+    """Run ``state = step(state)`` to its fixpoint and return it.
+
+    A round is ``step(state).localCheckpoint(eager=False)`` plus a
+    one-row checksum over ``cols`` — the round's only action, so it
+    also materialises the pin. The checksum is a type-agnostic sum of
+    xxhash64 in decimal(38,0) (a long sum would overflow), coalesced
+    to 0 so an empty state converges too; the loops driven here are
+    deterministic and monotone, so an unchanged sum (up to a ~2^-64
+    collision) is the fixpoint, never an oscillation. ``what`` is
+    ``(operator, budget parameter)``: a loop that runs out of
+    ``max_iter`` rounds raises ``RuntimeError`` naming both rather
+    than return a mid-iteration state.
+    """
+    a, b = cols
+    prev = None
+    for _ in range(max_iter):
+        state = step(state).localCheckpoint(eager=False)
+        cur = state.agg(
+            F.coalesce(
+                F.sum(F.xxhash64(F.col(a), F.col(b)).cast("decimal(38,0)")),
+                F.lit(0).cast("decimal(38,0)"),
+            ).alias("s")
+        ).collect()[0]["s"]
+        if cur == prev:
+            return state
+        prev = cur
+    op, budget = what
+    raise RuntimeError(
+        f"{op} did not reach the fixpoint within {budget}={max_iter} "
+        f"rounds; raise {budget}"
+    )
 
 
 def pagerank(
@@ -40,7 +89,6 @@ def pagerank(
     src_col: str = "src",
     dst_col: str = "dst",
     scale: int = PR_SCALE,
-    checkpoint_every: int = 8,
 ) -> DataFrame:
     """(v, rank) after ``iters`` integer power iterations over the
     directed edge list. Vertices are the edge endpoints (an isolated
@@ -96,7 +144,7 @@ def pagerank(
                 ).alias("rank"),
             )
         )
-        if checkpoint_every and it % checkpoint_every == 0 and it < iters:
+        if it % _PR_CHECKPOINT_EVERY == 0 and it < iters:
             ranks = ranks.localCheckpoint(eager=False)
     # Materialize the final ranks so e_deg can be unpersisted here rather
     # than leaking a cached DataFrame for the session lifetime (the cache
@@ -181,7 +229,6 @@ def kcore(
     src_col: str = "src",
     dst_col: str = "dst",
     max_rounds: int = 64,
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """The k-core of an undirected graph — the maximal subgraph where
     every vertex keeps degree ≥ k — as ``(v, core_deg)``. The dedup
@@ -189,13 +236,13 @@ def kcore(
     dense template clusters (mirror farms, boilerplate families) from
     chance pairwise collisions, which no per-edge threshold can do.
 
-    Standard peeling, relationally: each round computes degrees (one
-    combinable groupBy over both endpoint projections), drops
-    vertices below k, and restricts the edge list with two semi-joins.
-    The loop early-exits on a 1-row convergence probe (count of
-    dropped vertices — never a label collect), and ``localCheckpoint``
-    every ``checkpoint_every`` rounds bounds plan depth exactly like
-    the connected-components iteration.
+    Standard peeling, relationally, as a :func:`converge` step over
+    the canonical edge list: degrees (one combinable groupBy over both
+    endpoint projections) → keep the vertices with degree ≥ k → two
+    semi-joins restrict the edges. The loop ends when a round drops
+    no edge and returns that edge set's degrees; peeling deeper than
+    ``max_rounds`` raises ``RuntimeError`` (a path loses two vertices
+    per round, so a 140-vertex path under k=2 needs 70).
 
     Exactness contract (how a fixed-unroll DuckDB oracle can replay an
     early-exiting loop bit-exactly): peeling is monotone — once the
@@ -203,8 +250,7 @@ def kcore(
     every subsequent round is the identity. So ANY round count ≥ the
     convergence round yields the same result, and the oracle simply
     unrolls a generous fixed number of rounds while Spark stops at
-    the probe. Pure integer arithmetic throughout; rounds needed ≤
-    peeling depth (≤ vertex count, in practice a handful).
+    the probe. Pure integer arithmetic throughout.
     """
     if k < 1:
         raise ValueError("kcore needs k >= 1")
@@ -225,25 +271,14 @@ def kcore(
             .agg(F.count(F.lit(1)).alias("core_deg"))
         )
 
-    for rnd in range(1, max_rounds + 1):
-        # materialize the (small) degree table once per round: the
-        # probe and the keep-list read it without re-running the
-        # degree shuffle twice. r13 (guide §5, the CC-fixpoint r10
-        # lesson): the checkpoint is LAZY and the probe count is the
-        # materializing action — the eager form spent a separate
-        # materialization job per peel round on top of the probe,
-        # a pure per-round constant (2 jobs/round → 1)
-        deg = degrees(e).localCheckpoint(eager=False)
-        dropped = deg.filter(F.col("core_deg") < k).count()  # 1-row probe
-        if dropped == 0:
-            break
-        keep = deg.filter(F.col("core_deg") >= k).select("v")
-        e = (
-            e.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
+    def peel(ed: DataFrame) -> DataFrame:
+        keep = degrees(ed).filter(F.col("core_deg") >= k).select("v")
+        return (
+            ed.join(keep.withColumnRenamed("v", "a"), "a", "left_semi")
             .join(keep.withColumnRenamed("v", "b"), "b", "left_semi")
         )
-        if checkpoint_every and rnd % checkpoint_every == 0:
-            e = e.localCheckpoint(eager=True)
+
+    e = converge(e, peel, ("a", "b"), max_rounds, ("kcore", "max_rounds"))
     return degrees(e)
 
 
@@ -252,7 +287,6 @@ def label_propagation(
     iters: int = 4,
     src_col: str = "src",
     dst_col: str = "dst",
-    checkpoint_every: int = 4,
 ) -> DataFrame:
     """Synchronous label propagation (Raghavan et al. 2007, the
     deterministic variant): every vertex starts as its own label and
@@ -311,7 +345,7 @@ def label_propagation(
             )
             .select("v", (-F.col("m.neg")).alias("label"))
         )
-        if checkpoint_every and it % checkpoint_every == 0 and it < iters:
+        if it % _LPA_CHECKPOINT_EVERY == 0 and it < iters:
             labels = labels.localCheckpoint(eager=False)
     return labels
 

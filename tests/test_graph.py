@@ -188,6 +188,21 @@ def test_kcore_duplicate_and_reversed_edges_collapse(spark):
     assert got == {0: 2, 1: 2, 2: 2}
 
 
+def test_kcore_long_path_peels_to_empty(spark):
+    # a path loses both ends per round: 100 vertices need 50 peel
+    # rounds (plus the round that sees no change), within max_rounds=64
+    edges = [(i, i + 1) for i in range(99)]
+    assert _kcore_spark(spark, edges, 2) == {}
+
+
+def test_kcore_raises_when_peeling_exceeds_max_rounds(spark):
+    # 140 vertices need 70 rounds: stopping at 64 would return a
+    # leftover stub of the path, which is not the (empty) 2-core
+    edges = [(i, i + 1) for i in range(139)]
+    with pytest.raises(RuntimeError, match="max_rounds"):
+        _kcore_spark(spark, edges, 2)
+
+
 def test_kcore_rejects_bad_k(spark):
     from stock_indicators_etl_spark.operators.graph import kcore
 

@@ -341,7 +341,8 @@ def test_composed_neardup_caps_and_salting(spark):
     assert salted == got
 
 
-def test_connected_components_string_ids(spark):
+@pytest.mark.parametrize("method", ["label", "star"])
+def test_connected_components_string_ids(spark, method):
     """ADVICE r2 medium: string doc_ids (common in real corpora) must
     propagate to the true fixpoint — the old decimal-cast convergence
     probe NULL'd on non-numeric ids and declared convergence after one
@@ -356,9 +357,28 @@ def test_connected_components_string_ids(spark):
     )
     verts = spark.createDataFrame(pd.DataFrame({"doc_id": ids + ["zz-solo"]}))
     got = {
-        r.doc_id: r.component for r in connected_components(edges, verts).collect()
+        r.doc_id: r.component
+        for r in connected_components(edges, verts, method=method).collect()
     }
     assert got == {**{i: "doc-000" for i in ids}, "zz-solo": "zz-solo"}
+
+
+@pytest.mark.parametrize("method", ["label", "star"])
+def test_connected_components_leaves_no_cached_frames(spark, method):
+    """Round states are lazy local checkpoints, never ``persist()``ed
+    frames, so the session cache is empty after the call returns."""
+    from stock_indicators_etl_spark.llmdata.dedup import connected_components
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    for n in range(2, 10):
+        spark.catalog.clearCache()
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+        )
+        verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+        got = connected_components(edges, verts, method=method).collect()
+        assert {r.component for r in got} == {0}
+        assert cache.isEmpty(), f"chain of {n}: cached frames left behind"
 
 
 def test_connected_components_shapes(spark):

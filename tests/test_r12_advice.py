@@ -1,8 +1,8 @@
 """Round-12 ADVICE regression tests: unigram_encode sharing the
-words() tokenization convention, the connected-components unpersist
-deferral policy (_PinLedger), bench's printed summary carrying both
-the composite floor and the measured total, and the leak gate's
-script-stem allowlist being scoped to scripts/ only."""
+words() tokenization convention, connected components converging on
+a long chain, bench's printed summary carrying both the composite
+floor and the measured total, and the leak gate's script-stem
+allowlist being scoped to scripts/ only."""
 
 from __future__ import annotations
 
@@ -98,23 +98,6 @@ class TestUnigramEncodeWordsConvention:
 
 
 class TestPinLedgerPolicy:
-    def test_releases_only_at_checkpoint_pins_newest_first(self):
-        from stock_indicators_etl_spark.llmdata.dedup import _PinLedger
-
-        led = _PinLedger()
-        # rounds 1-2 persist: nothing may be released (the newest
-        # cache embeds every older one as a plan subtree)
-        assert led.pin("L1", released_by_this_pin=False) == []
-        assert led.pin("L2", released_by_this_pin=False) == []
-        assert led.still_pinned == ["L1", "L2"]
-        # round 3 checkpoint: everything older goes, NEWEST FIRST so
-        # no surviving cache entry embeds a released subtree
-        assert led.pin("L3", released_by_this_pin=True) == ["L2", "L1"]
-        assert led.still_pinned == []
-        # next window repeats the pattern
-        assert led.pin("L4", released_by_this_pin=False) == []
-        assert led.pin("L5", released_by_this_pin=True) == ["L4"]
-
     def test_long_chain_components_cross_checkpoint_windows(self, spark):
         """Integration: a diameter-8 chain forces the fixpoint loop
         through multiple persist/checkpoint windows; labels must
