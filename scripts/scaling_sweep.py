@@ -533,11 +533,13 @@ def _render(results: dict[str, list[float | None]]) -> str:
         "- `dedup_incremental`'s r10 fixed-overhead growth (VERDICT",
         "  r10 wrong #1: ~17 s exclusive steady state, attributed to",
         "  r9-era per-job safety constants) was REDUCED in r11, not",
-        "  just attributed: (a) the CC fixpoint now costs ONE job per",
-        "  round — persist() with the convergence probe as the",
-        "  materializing action, a lazy localCheckpoint every third",
-        "  round for lineage — instead of an eager checkpoint PLUS",
-        "  the probe; (b) the quotient edge list is pinned once, so",
+        "  just attributed: (a) the CC fixpoint stopped paying an",
+        "  eager checkpoint PLUS the probe per round (r11 used",
+        "  persist() with a localCheckpoint every third round; today",
+        "  `operators.graph.converge` takes one lazy localCheckpoint",
+        "  per round, materialised by the checksum probe, the",
+        "  round's only action); (b) the quotient edge list is",
+        "  pinned once, so",
         "  the final mapping no longer re-runs the band-join →",
         "  Jaccard-verify chain for the vertex set (that recompute",
         "  was 2.1-3.6 s per increment, profiled). sf0.1 exclusive",

@@ -40,7 +40,7 @@ from stock_indicators_etl_spark.llmdata.dedup import (  # noqa: E402
     minhash_lsh_candidates,
     minhash_signatures,
     ngram_jaccard_pairs,
-    word_shingles,
+    shingle_sets,
 )
 from stock_indicators_etl_spark.llmdata.sampling import hash_sample  # noqa: E402
 from stock_indicators_etl_spark.queries_llm import (  # noqa: E402
@@ -54,23 +54,15 @@ SFS = [
 ]
 
 
-def _h56(c):
-    return F.conv(F.substring(F.md5(c), 1, 14), 16, 10).cast("long")
-
-
 def measure(spark, sf_dir: str) -> dict:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     sample = hash_sample(docs, DEDUP_EVAL_SAMPLE_RATE).persist()
     n_docs = sample.count()
 
     # --- truth-side structure ---
-    doc_sets = (
-        word_shingles(sample, "text", 3, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
+    entries = shingle_sets(sample, "text", 3).select(
+        "doc_id", F.explode("sh_set").alias("h")
     )
-    entries = doc_sets.select("doc_id", F.explode("hs").alias("h"))
     posting_entries = entries.count()
     df_per_h = entries.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
     posting_pairs = df_per_h.agg(

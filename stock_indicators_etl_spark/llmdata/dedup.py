@@ -21,6 +21,16 @@ program with a DuckDB-portable formulation:
   per round, materialised by the one-row checksum that is the
   round's only action.
 
+The posting/MinHash family shares three pieces, one copy each:
+:func:`_bucket_pairs` is the in-bucket pair expansion (plain ids or
+``(id, n)`` structs, optionally salted by ``chunk``) behind LSH
+buckets, shingle postings, winnowing and the AllPairs prefix index;
+:func:`shingle_sets` builds every per-doc ``(doc_id, sh_set)``; and
+:func:`_verify_jaccard` is the one merge-pinned candidate verifier
+(``ngram_jaccard_pairs(candidates=…)``, :func:`decontaminate`,
+``dedup_index.dedup_increment``), with the Jaccard ratio written once
+in :func:`_with_jaccard`.
+
 Portable-hash note: Spark ``hash()`` ≠ DuckDB ``hash()``, so all
 hashing goes through md5 — minhashes compare *hex strings*
 (lexicographic min ≡ numeric min on fixed-width hex), and integer
@@ -30,8 +40,11 @@ both engines).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from stock_indicators_etl_spark.llmdata.hashing import h56 as _h56
 from stock_indicators_etl_spark.llmdata.text import norm_text, spread, words
@@ -40,62 +53,213 @@ from stock_indicators_etl_spark.llmdata.text import norm_text, spread, words
 _spread = spread  # shared fan-out heuristic (llmdata.text.spread)
 
 
-def _bucket_pairs(grouped: DataFrame, id_list_col: str = "ids") -> DataFrame:
-    """Expand sorted id-arrays into (doc_a < doc_b) pairs with array
-    higher-order functions — the single-pass alternative to a
+def _bucket_pairs(
+    grouped: DataFrame, id_list_col: str = "ids", chunk: int | None = None
+) -> DataFrame:
+    """Expand each bucket's id array into its (doc_a < doc_b) pairs with
+    array higher-order functions — the single-pass alternative to a
     bucket self-join (which would recompute the bucket lineage for
-    both sides and shuffle it twice). O(b²) per bucket happens inside
-    one codegen'd expression; huge buckets are a skew problem for the
-    self-join formulation too, and should be frequency-capped
-    upstream at scale.
+    both sides and shuffle it twice). The one in-bucket expansion of
+    the package: LSH bands, posting lists, winnowing fingerprints and
+    the AllPairs prefix index all emit their pairs here.
+
+    Elements are plain ids (emits ``doc_a, doc_b``) or ``(id, n)``
+    structs that carry the doc's set size (emits ``doc_a, doc_b, _na,
+    _nb``), so length logic downstream reads the count riding the pair
+    instead of joining back onto a per-doc size table — nothing
+    corpus-sized to broadcast (DESIGN §4.23). Struct sort orders by
+    ``id`` first and ``n`` is functionally dependent on it, so pair
+    order is the same for both kinds.
+
+    ``chunk=None``: one row per bucket does its O(b²) work inside one
+    codegen'd expression. ``chunk=c`` salts hot buckets: the sorted
+    array is split into ⌈b/c⌉ ordered chunks and each chunk PAIR
+    becomes its own row (:func:`_salted_chunk_rows`) before expansion,
+    so a bucket's work spreads over (b/c)²/2 rows of ≤ c² pairs each.
+    Chunks are ordered slices of the sorted array, so cross-chunk pairs
+    satisfy a < b by construction. Same output either way.
     """
-    ids = F.array_sort(F.col(id_list_col))
-    pairs = F.flatten(
-        F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
+    carry_n = isinstance(grouped.schema[id_list_col].dataType.elementType, StructType)
+    cols = ["doc_a", "doc_b", "_na", "_nb"] if carry_n else ["doc_a", "doc_b"]
+
+    def pair(x: Column, y: Column) -> Column:
+        if carry_n:
+            return F.struct(
+                x["id"].alias("doc_a"),
+                y["id"].alias("doc_b"),
+                x["n"].alias("_na"),
+                y["n"].alias("_nb"),
+            )
+        return F.struct(x.alias("doc_a"), y.alias("doc_b"))
+
+    def triangle(ids: Column) -> Column:
+        return F.flatten(
+            F.transform(
+                ids,
+                lambda x, i: F.transform(
+                    F.slice(ids, i + F.lit(2), F.size(ids)), lambda y: pair(x, y)
+                ),
+            )
         )
-    )
-    return (
-        grouped.filter(F.size(id_list_col) > 1)
-        .select(F.explode(pairs).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
+
+    if chunk is None:
+        rows = grouped.filter(F.size(id_list_col) > 1)
+        pairs = triangle(F.array_sort(F.col(id_list_col)))
+    else:
+        rows = _salted_chunk_rows(grouped, id_list_col, chunk)
+        a = F.col("a")
+        cross = F.flatten(
+            F.transform(a, lambda x: F.transform(F.col("b"), lambda y: pair(x, y)))
+        )
+        pairs = F.when(F.col("same"), triangle(a)).otherwise(cross)
+    return rows.select(F.explode(pairs).alias("p")).select(
+        *[F.col(f"p.{c}").alias(c) for c in cols]
     )
 
 
-def _bucket_pairs_carrying_n(grouped: DataFrame, id_list_col: str = "ids") -> DataFrame:
-    """(id, n)-struct variant of :func:`_bucket_pairs`: each posting
-    entry carries its doc's set size, so downstream length logic (the
-    Jaccard denominator, the AllPairs length filter) consumes the count
-    riding the pair — no join back onto a per-doc length table, hence
-    no broadcast of a corpus-sized frame (DESIGN §4.23). Struct sort
-    orders by ``id`` first and ``n`` is functionally dependent on it,
-    so the (doc_a < doc_b) pair order matches :func:`_bucket_pairs`.
-    Emits ``doc_a, doc_b, _na, _nb``.
+def _salted_chunk_rows(
+    grouped: DataFrame, id_list_col: str = "ids", chunk: int = 256
+) -> DataFrame:
+    """The salted pre-expansion layout of :func:`_bucket_pairs`: each
+    bucket's sorted id array split into ⌈b/c⌉ ordered chunks, one ROW
+    per chunk pair (i ≤ j, ``same`` marks i == j). Separate so the
+    per-task work bound — every row carries ≤ ``chunk`` ids per side,
+    i.e. ≤ c² pair work — is directly assertable in tests.
     """
     ids = F.array_sort(F.col(id_list_col))
-    pairs = F.flatten(
+    n_chunks = F.ceil(F.size(ids) / F.lit(chunk)).cast("int")
+    chunks = F.transform(
+        F.sequence(F.lit(0), n_chunks - F.lit(1)),
+        lambda i: F.slice(ids, i * chunk + F.lit(1), F.lit(chunk)),
+    )
+    # (chunk_i, chunk_j) with i <= j; i == j marks intra-chunk rows
+    chunk_pairs = F.flatten(
         F.transform(
-            ids,
-            lambda x, i: F.transform(
-                F.slice(ids, i + F.lit(2), F.size(ids)),
-                lambda y: F.struct(
-                    x["id"].alias("doc_a"),
-                    y["id"].alias("doc_b"),
-                    x["n"].alias("_na"),
-                    y["n"].alias("_nb"),
+            chunks,
+            lambda ca, i: F.transform(
+                F.slice(chunks, i + F.lit(1), F.size(chunks)),
+                lambda cb, j: F.struct(
+                    ca.alias("a"), cb.alias("b"), (j == 0).alias("same")
                 ),
             ),
         )
     )
     return (
         grouped.filter(F.size(id_list_col) > 1)
-        .select(F.explode(pairs).alias("p"))
-        .select("p.doc_a", "p.doc_b", "p._na", "p._nb")
+        .select(F.explode(chunk_pairs).alias("cp"))
+        .select(F.col("cp.a").alias("a"), F.col("cp.b").alias("b"), F.col("cp.same").alias("same"))
     )
+
+
+def _posting_overlap(
+    df: DataFrame, text_col: str, k: int, max_doc_freq: int | None
+) -> DataFrame:
+    """``(doc_a, doc_b, n_inter, n_a, n_b)`` for every pair sharing ≥1
+    shingle, from the shingle posting lists — the body the Jaccard and
+    containment joins share; only their final ratio differs.
+
+    One ``groupBy(doc_id).collect_set`` dedups each doc's shingles and
+    yields its set size ``n`` scan-locally; the re-exploded (doc_id, h,
+    n) rows build the postings, so EVERY POSTING ENTRY CARRIES ITS
+    DOC'S SIZE (the AllPairs pattern). After the pair expansion the
+    plan is ONE combinable aggregate — ``n`` is functionally dependent
+    on the id, so ``max`` under the count recovers it — with zero joins
+    and zero broadcasts (plan-asserted in tests/test_plans.py). The r8
+    form joined a per-doc sizes aggregate back under a forced
+    broadcast: one row per doc is still billions of rows at 100 TB, the
+    OOM class DESIGN §4.23 bans. Cost: the stream shuffles twice
+    (doc_id, then h) instead of once.
+
+    ``max_doc_freq`` drops postings longer than the cap before
+    expansion; sizes are computed before the cap, so they stay exact
+    and the cap only restricts which shingles count toward ``n_inter``
+    (mirrored in the capped oracle).
+    """
+    entries = shingle_sets(df, text_col, k).select(
+        "doc_id", F.size("sh_set").alias("n"), F.explode("sh_set").alias("h")
+    )
+    posting = entries.groupBy("h").agg(
+        F.collect_list(F.struct(F.col("doc_id").alias("id"), F.col("n"))).alias("ids")
+    )
+    if max_doc_freq is not None:
+        posting = posting.filter(F.size("ids") <= max_doc_freq)
+    return (
+        _bucket_pairs(posting)
+        .groupBy("doc_a", "doc_b")
+        .agg(
+            F.count(F.lit(1)).alias("n_inter"),
+            F.max("_na").alias("n_a"),
+            F.max("_nb").alias("n_b"),
+        )
+    )
+
+
+def _with_jaccard(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Append ``jaccard = |∩| / (|A|+|B|−|∩|)`` to ``(doc_a, doc_b,
+    n_inter, n_a, n_b)`` rows — one IEEE division of exact integers —
+    and keep ``jaccard ≥ threshold`` when ``threshold > 0``."""
+    out = pairs.withColumn(
+        "jaccard",
+        F.col("n_inter").cast("double")
+        / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
+    )
+    return out.filter(F.col("jaccard") >= F.lit(threshold)) if threshold > 0 else out
+
+
+def _candidate_docs(
+    frame: DataFrame, candidates: DataFrame, cols: tuple[str, ...] = ("doc_a", "doc_b")
+) -> DataFrame:
+    """``frame`` restricted to the doc_ids named in ``candidates``'
+    ``cols``. The id list scales with the candidate set, so the semi
+    join is merge-pinned like the joins of :func:`_verify_jaccard`,
+    never force-broadcast (DESIGN §4.23)."""
+    ids = [candidates.select(F.col(c).alias("doc_id")) for c in cols]
+    return frame.join(
+        reduce(DataFrame.union, ids).distinct().hint("merge"), "doc_id", "left_semi"
+    )
+
+
+def _verify_jaccard(
+    candidates: DataFrame, sets_a: DataFrame, sets_b: DataFrame, threshold: float
+) -> DataFrame:
+    """Exact Jaccard of candidate pairs ``(doc_a, doc_b)`` from per-doc
+    shingle sets ``(doc_id, sh_set)`` — ``sets_a`` for the ``doc_a``
+    side, ``sets_b`` for ``doc_b`` (the same frame for a self-join).
+    ``|∩|`` is an ``array_intersect``, so the posting-list pair
+    explosion never happens; pairs with an empty intersection drop, as
+    the posting form never emits them. Emits ``(doc_a, doc_b, n_inter,
+    n_a, n_b, jaccard)``.
+
+    One join policy: the candidate set is NOT bounded by construction
+    (per-bucket caps bound skew, but the total is cap × n_buckets ∝
+    corpus; the forced broadcast OOM'd ``neardup_components`` at 500k
+    docs and the AllPairs prefix candidates hit an 8 GB broadcast
+    build at sf1), and the sets are one row per candidate doc. Every
+    side is ``hint("merge")``-pinned — dropping a broadcast hint is not
+    enough, the static planner still picks a broadcast build from the
+    garbage-tiny estimate of a HOF-derived lineage. The hint holds at
+    run time too: AQE does not override it (the executed neardup
+    verify plan keeps its sort-merge joins with 10–730 KiB sides), so
+    a small candidate set pays a sort instead of a broadcast — the
+    price of one plan that is safe at any scale.
+    """
+    a = sets_a.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
+    b = sets_b.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
+    pairs = (
+        a.hint("merge")
+        .join(candidates.hint("merge"), "doc_a")
+        .join(b.hint("merge"), "doc_b")
+        .select(
+            "doc_a",
+            "doc_b",
+            F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
+            F.size("sa").alias("n_a"),
+            F.size("sb").alias("n_b"),
+        )
+        .filter(F.col("n_inter") > 0)
+    )
+    return _with_jaccard(pairs, threshold)
+
 
 def containment_pairs(
     df: DataFrame,
@@ -113,46 +277,17 @@ def containment_pairs(
     corpus-internal counterpart of :func:`ngram_containment` (which
     scores docs against a BENCHMARK's broadcast shingle set).
 
-    Plan: identical to the Jaccard posting-list path — per-doc set
-    sizes ride every posting entry (:func:`_bucket_pairs_carrying_n`,
-    the AllPairs pattern), so after pair expansion there is ONE
-    combinable aggregate, zero joins, zero broadcasts; the
-    containment denominator is ``least(n_a, n_b)`` read off the pair
-    row, one IEEE division of exact integers. ``max_doc_freq`` caps
-    hot-shingle pair expansion exactly as in the Jaccard form (capped
-    semantics mirror in the oracle); at corpus scale set it
-    (:data:`SCALE_MAX_DOC_FREQ`).
+    Plan: the Jaccard posting-list path (:func:`_posting_overlap`) —
+    one combinable aggregate after pair expansion, zero joins, zero
+    broadcasts; the containment denominator is ``least(n_a, n_b)`` read
+    off the pair row, one IEEE division of exact integers.
+    ``max_doc_freq`` caps hot-shingle pair expansion exactly as in the
+    Jaccard form (capped semantics mirror in the oracle); at corpus
+    scale set it (:data:`SCALE_MAX_DOC_FREQ`).
     """
-    doc_sets = (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-    )
-    entries = doc_sets.select(
-        "doc_id", F.size("hs").alias("n_sh"), F.explode("hs").alias("h")
-    )
-    posting = entries.groupBy("h").agg(
-        F.collect_list(
-            F.struct(F.col("doc_id").alias("id"), F.col("n_sh").alias("n"))
-        ).alias("ids")
-    )
-    if max_doc_freq is not None:
-        posting = posting.filter(F.size("ids") <= max_doc_freq)
-    out = (
-        _bucket_pairs_carrying_n(posting)
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.max("_na").alias("n_a"),
-            F.max("_nb").alias("n_b"),
-        )
-        .withColumn(
-            "containment",
-            F.col("n_inter").cast("double")
-            / F.least("n_a", "n_b").cast("double"),
-        )
-        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "containment")
+    out = _posting_overlap(df, text_col, k, max_doc_freq).withColumn(
+        "containment",
+        F.col("n_inter").cast("double") / F.least("n_a", "n_b").cast("double"),
     )
     if threshold > 0:
         out = out.filter(F.col("containment") >= F.lit(threshold))
@@ -422,6 +557,24 @@ def word_shingles(
     return out.distinct() if distinct else out
 
 
+def shingle_sets(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
+    """``(doc_id, sh_set)``: each doc's distinct word k-gram shingles as
+    56-bit md5 hashes (``hashing.h56``, the same hashing as the
+    oracle). The shingle stream never shuffles at full width: it is
+    hashed scan-side and deduped by one map-side-combined
+    ``groupBy(doc_id).collect_set``. The one set builder behind every
+    Jaccard / containment operator here and the ``<index>/shingles``
+    layout of :mod:`.dedup_index` (whose readers depend on the column
+    name ``sh_set``). Docs without a shingle get no row.
+    """
+    return (
+        word_shingles(df, text_col, k, distinct=False)
+        .select("doc_id", _h56(F.col("shingle")).alias("h"))
+        .groupBy("doc_id")
+        .agg(F.collect_set("h").alias("sh_set"))
+    )
+
+
 #: Double-hashing parameters: one md5 per shingle yields two 56-bit
 #: halves h1/h2 (14 hex digits each — exact in BIGINT in both
 #: engines); permutation i hashes to (h1 + i·h2) mod MH_PRIME.
@@ -470,78 +623,6 @@ def minhash_signatures(
     return hashed.groupBy("doc_id").agg(*aggs)
 
 
-def _salted_chunk_rows(
-    grouped: DataFrame, id_list_col: str = "ids", chunk: int = 256
-) -> DataFrame:
-    """The salted pre-expansion layout: each bucket's sorted id array
-    split into ⌈b/c⌉ ordered chunks, one ROW per chunk pair (i ≤ j,
-    ``same`` marks i == j). Exposed separately from
-    :func:`_bucket_pairs_salted` so the per-task work bound — every
-    row carries ≤ ``chunk`` ids per side, i.e. ≤ c² pair work — is
-    directly assertable in tests.
-    """
-    ids = F.array_sort(F.col(id_list_col))
-    n_chunks = F.ceil(F.size(ids) / F.lit(chunk)).cast("int")
-    chunks = F.transform(
-        F.sequence(F.lit(0), n_chunks - F.lit(1)),
-        lambda i: F.slice(ids, i * chunk + F.lit(1), F.lit(chunk)),
-    )
-    # (chunk_i, chunk_j) with i <= j; i == j marks intra-chunk rows
-    chunk_pairs = F.flatten(
-        F.transform(
-            chunks,
-            lambda ca, i: F.transform(
-                F.slice(chunks, i + F.lit(1), F.size(chunks)),
-                lambda cb, j: F.struct(
-                    ca.alias("a"), cb.alias("b"), (j == 0).alias("same")
-                ),
-            ),
-        )
-    )
-    return (
-        grouped.filter(F.size(id_list_col) > 1)
-        .select(F.explode(chunk_pairs).alias("cp"))
-        .select(F.col("cp.a").alias("a"), F.col("cp.b").alias("b"), F.col("cp.same").alias("same"))
-    )
-
-
-def _bucket_pairs_salted(
-    grouped: DataFrame, id_list_col: str = "ids", chunk: int = 256
-) -> DataFrame:
-    """Skew-salted variant of :func:`_bucket_pairs`: a bucket of b ids
-    emits b²/2 pairs — in the plain form that is ONE task row doing
-    O(b²) work (a straggler for boilerplate-heavy buckets). Here the
-    sorted id array is split into ⌈b/c⌉ chunks and each chunk *pair*
-    becomes its own row before cross-expansion, so a hot bucket's work
-    spreads over (b/c)²/2 parallel rows. Chunks are ordered slices of
-    the sorted array, so cross-chunk pairs satisfy a < b by
-    construction. Same output as :func:`_bucket_pairs`.
-    """
-    rows = _salted_chunk_rows(grouped, id_list_col, chunk)
-    a = F.col("a")
-    intra = F.flatten(
-        F.transform(
-            a,
-            lambda x, i: F.transform(
-                F.slice(a, i + F.lit(2), F.size(a)),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
-    cross = F.flatten(
-        F.transform(
-            a,
-            lambda x: F.transform(
-                F.col("b"), lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b"))
-            ),
-        )
-    )
-    return (
-        rows.select(F.explode(F.when(F.col("same"), intra).otherwise(cross)).alias("p"))
-        .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -557,14 +638,14 @@ def minhash_lsh_candidates(
 
     Scale path: one shuffle on (band_idx, band_key) — docs sharing a
     band collide in a bucket; pairs are expanded inside the bucket
-    (``_bucket_pairs``), never via all-pairs or a second pass over the
-    signature lineage. ``max_bucket_size`` drops hot buckets
+    (:func:`_bucket_pairs`), never via all-pairs or a second pass over
+    the signature lineage. ``max_bucket_size`` drops hot buckets
     (boilerplate-heavy corpora ⇒ power-law bucket sizes; a bucket of
     b docs emits b²/2 pairs) — the standard skew guard at corpus
     scale; ``None`` keeps exact reference semantics. ``salt_chunk``
     instead *keeps* hot buckets but spreads their pair expansion over
-    (b/chunk)² rows (:func:`_bucket_pairs_salted`) — same output,
-    no stragglers.
+    (b/chunk)² rows (``_bucket_pairs(chunk=salt_chunk)``) — same
+    output, no stragglers.
     """
     sig = minhash_signatures(df, text_col, n_hashes, k)
     return _banded_candidates(sig, n_hashes, band_size, max_bucket_size, salt_chunk)
@@ -604,9 +685,7 @@ def _banded_candidates(
     )
     if max_bucket_size is not None:
         buckets = buckets.filter(F.size("ids") <= max_bucket_size)
-    if salt_chunk is not None:
-        return _bucket_pairs_salted(buckets, chunk=salt_chunk).distinct()
-    return _bucket_pairs(buckets).distinct()
+    return _bucket_pairs(buckets, chunk=salt_chunk).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -621,7 +700,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.0,
     candidates: DataFrame | None = None,
     max_doc_freq: int | None = None,
-    broadcast_candidates: bool = False,
 ) -> DataFrame:
     """Exact Jaccard similarity over word k-gram shingle sets.
 
@@ -629,17 +707,6 @@ def ngram_jaccard_pairs(
     shingle) — never a cross join; optionally restricted to
     ``candidates`` (doc_a, doc_b), e.g. LSH output.
     Jaccard = |∩| / (|A|+|B|−|∩|).
-
-    ``broadcast_candidates`` defaults to ``False`` (r9, the sf10
-    decade's catch): LSH candidate sets are NOT bounded by
-    construction — per-bucket caps bound SKEW, but the total is
-    cap × n_buckets ∝ corpus size, and the forced broadcast OOM'd
-    ``neardup_components`` at 500k docs. False = every
-    candidate-side join is ``hint("merge")``-pinned and AQE
-    re-broadcasts from real sizes when small (identical results,
-    small-SF speed preserved). ``True`` remains for candidate sets
-    bounded by cardinality CLASS — a fixed query list, a small eval
-    corpus — per DESIGN §4.23.
 
     ``max_doc_freq`` drops shingles appearing in more than that many
     docs before pair expansion (a shingle shared by d docs emits d²/2
@@ -653,156 +720,38 @@ def ngram_jaccard_pairs(
     Plan shapes:
 
     - ``candidates=None`` (exact all-pairs-sharing-a-shingle): the
-      shingle stream is deduped per doc with one
-      ``groupBy(doc_id).collect_set(h)``; the set size ``n_sh`` is
-      read off the set scan-locally and the re-exploded (doc_id, h,
-      n_sh) rows build the postings, so EVERY POSTING ENTRY CARRIES
-      ITS DOC'S SIZE (the AllPairs pattern,
-      :func:`_bucket_pairs_carrying_n`). The Jaccard denominator then
-      rides the pair stream — there is NO per-doc sizes table and NO
-      join after pair expansion, hence nothing to broadcast. (The r8
-      form joined a per-doc sizes aggregate back onto the pair counts
-      under a forced broadcast — one small row per doc is still
-      billions of rows at 100 TB, the exact OOM class DESIGN §4.23
-      bans; VERDICT r8 #1.) Cost: the stream shuffles twice (doc_id
-      then h) instead of once, the price of eliminating the
-      post-expansion join entirely.
+      posting-list path (:func:`_posting_overlap`) — sizes ride the
+      posting entries, so after pair expansion there is one combinable
+      aggregate and nothing to join or broadcast.
     - with ``candidates``: the corpus is semi-joined down to candidate
-      docs *before* shingling, then the candidate pairs broadcast-join
-      per-doc shingle sets and |∩| is an ``array_intersect`` — the
-      pair explosion (Σ_s d_s² over the full corpus) never happens.
-      Candidate doc sets are tiny by construction (LSH output), so
-      total work is O(candidate docs · shingles/doc). ``candidates``
-      is persisted here (it is consumed by three operators; without
-      pinning, its LSH lineage would recompute each time). This path
-      is always exact — ``max_doc_freq`` does not apply (there is no
-      posting-list expansion to cap).
+      docs *before* shingling, then :func:`_verify_jaccard` joins the
+      candidate pairs to per-doc shingle sets and |∩| is an
+      ``array_intersect`` — the pair explosion (Σ_s d_s² over the full
+      corpus) never happens; total work is O(candidate docs ·
+      shingles/doc). This path is always exact — ``max_doc_freq``
+      does not apply (there is no posting-list expansion to cap).
     """
-    if candidates is not None:
-        if max_doc_freq is not None:
-            # the candidate path has no posting-list expansion to cap;
-            # silently returning exact values for a caller who asked
-            # for capped semantics would be a behavior trap
-            raise ValueError(
-                "max_doc_freq only applies to the posting-list (candidates=None) "
-                "path; the candidate path is always exact"
-            )
-        # persisted because three operators consume it (cand_docs twice
-        # + the pair join); the registration lives as long as the
-        # plan — long-lived sessions invoking the pipeline repeatedly
-        # should clearCache() between invocations (bench.py does)
-        candidates = candidates.select("doc_a", "doc_b").persist()
-        cand_docs = (
-            candidates.select(F.col("doc_a").alias("doc_id"))
-            .union(candidates.select(F.col("doc_b").alias("doc_id")))
-            .distinct()
-        )
-        # broadcast discipline (DESIGN §4.23): the broadcast hint is
-        # only safe when the CANDIDATE SET is bounded by construction —
-        # true for banded-LSH output (bucket caps). Pass
-        # ``broadcast_candidates=False`` when the generator can emit a
-        # pair-stream-sized set (the AllPairs prefix filter at low
-        # thresholds on boilerplate-heavy corpora — the sf1 decade hit
-        # an 8 GB broadcast build there). Merely DROPPING the hint is
-        # not enough: the static planner's size estimate for the
-        # HOF-derived persisted candidate lineage is garbage-tiny, so
-        # it STILL picks BroadcastHashJoin and the build OOMs at sf1
-        # (r9 re-caught this in a fresh JVM — r8's 61 s pass sat just
-        # under the ceiling). ``hint("merge")`` pins the STATIC plan
-        # to a shuffle join; AQE then demotes to broadcast at runtime
-        # using REAL shuffle sizes whenever the set is actually small
-        # — fast at sf0.01, safe at any scale, results identical.
-        _b = F.broadcast if broadcast_candidates else (lambda d: d.hint("merge"))
-        # restrict BEFORE the shingle fan-out: only candidate docs pay
-        # the explode+distinct (the full-corpus fan-out already ran
-        # once, inside LSH candidate generation)
-        doc_sets = (
-            word_shingles(
-                df.join(_b(cand_docs), "doc_id", "left_semi"),
-                text_col, k, distinct=False,
-            )
-            .select("doc_id", _h56(F.col("shingle")).alias("h"))
-            .groupBy("doc_id")
-            .agg(F.collect_set("h").alias("sh_set"))
-        )
-        a = doc_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
-        b = doc_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
-        if not broadcast_candidates:
-            # doc_sets is ONE ROW PER CANDIDATE DOC — bounded only
-            # when the candidate set is (LSH bucket caps). With an
-            # unbounded generator the static planner still picks a
-            # broadcast build from the garbage HOF-lineage estimate
-            # (the r9 sf1 OOM shape); pin SMJ, let AQE re-broadcast
-            # from real sizes when the frame is actually small.
-            a = a.hint("merge")
-            b = b.hint("merge")
-        out = (
-            a.join(_b(candidates), "doc_a")
-            .join(b, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
-                F.size("sa").alias("n_a"),
-                F.size("sb").alias("n_b"),
-            )
-            .filter(F.col("n_inter") > 0)  # posting-list form never emits 0-∩ pairs
-            .withColumn(
-                "jaccard",
-                F.col("n_inter").cast("double")
-                / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-            )
-            .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
-        )
-        if threshold > 0:
-            out = out.filter(F.col("jaccard") >= F.lit(threshold))
-        return out
-
-    # per-doc shingle sets: one groupBy(doc_id) dedups the multiset
-    # and yields n_sh for free; the re-explode preserves nothing we
-    # need (the next groupBy re-hashes on h anyway) but lets n_sh ride
-    # every (doc_id, h) row into the postings. n_sh is computed BEFORE
-    # the doc-freq cap (sizes stay exact; the cap restricts only which
-    # shingles contribute to |∩|, mirroring the capped oracle).
-    doc_sets = (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-    )
-    entries = doc_sets.select(
-        "doc_id", F.size("hs").alias("n_sh"), F.explode("hs").alias("h")
-    )
-    posting = entries.groupBy("h").agg(
-        F.collect_list(
-            F.struct(F.col("doc_id").alias("id"), F.col("n_sh").alias("n"))
-        ).alias("ids")
-    )
-    capped = posting
+    if candidates is None:
+        return _with_jaccard(_posting_overlap(df, text_col, k, max_doc_freq), threshold)
     if max_doc_freq is not None:
-        capped = capped.filter(F.size("ids") <= max_doc_freq)
-    # sizes ride the pair stream (_na/_nb are functionally dependent on
-    # doc_a/doc_b, so max() under the count recovers them) — the plan
-    # after pair expansion is ONE combinable aggregate, zero joins,
-    # zero broadcasts (plan-asserted in tests/test_plans.py)
-    out = (
-        _bucket_pairs_carrying_n(capped)
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.count(F.lit(1)).alias("n_inter"),
-            F.max("_na").alias("n_a"),
-            F.max("_nb").alias("n_b"),
+        # the candidate path has no posting-list expansion to cap;
+        # silently returning exact values for a caller who asked for
+        # capped semantics would be a behavior trap
+        raise ValueError(
+            "max_doc_freq only applies to the posting-list (candidates=None) "
+            "path; the candidate path is always exact"
         )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .select("doc_a", "doc_b", "n_inter", "n_a", "n_b", "jaccard")
-    )
-    if threshold > 0:
-        out = out.filter(F.col("jaccard") >= F.lit(threshold))
-    return out
+    # persisted because three operators consume it (the candidate doc
+    # list twice + the pair join) and unpinned its LSH lineage would
+    # recompute each time; the registration lives as long as the plan
+    # — long-lived sessions invoking the pipeline repeatedly should
+    # clearCache() between invocations (bench.py does)
+    candidates = candidates.select("doc_a", "doc_b").persist()
+    # restrict BEFORE the shingle fan-out: only candidate docs pay the
+    # explode + collect_set (the full-corpus fan-out already ran once,
+    # inside LSH candidate generation)
+    doc_sets = shingle_sets(_candidate_docs(df, candidates), text_col, k)
+    return _verify_jaccard(candidates, doc_sets, doc_sets, threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -1020,21 +969,12 @@ def ngram_containment(
     count. Never a corpus self-join.
     """
 
-    doc_sh = (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("hs"))
-        .select("doc_id", F.explode("hs").alias("h"))
+    doc_sh = shingle_sets(df, text_col, k).select(
+        "doc_id", F.explode("sh_set").alias("h")
     )
-    b_sets = (
-        word_shingles(benchmark, text_col, k, distinct=False)
-        .select(F.col("doc_id").alias("bench_id"), _h56(F.col("shingle")).alias("h"))
-        .groupBy("bench_id")
-        .agg(F.collect_set("h").alias("hs"))
-    )
-    sizes = b_sets.select("bench_id", F.size("hs").cast("long").alias("n_bench"))
-    b_sh = b_sets.select("bench_id", F.explode("hs").alias("h"))
+    b_sets = shingle_sets(benchmark, text_col, k).withColumnRenamed("doc_id", "bench_id")
+    sizes = b_sets.select("bench_id", F.size("sh_set").cast("long").alias("n_bench"))
+    b_sh = b_sets.select("bench_id", F.explode("sh_set").alias("h"))
     common = (
         doc_sh.join(F.broadcast(b_sh), "h")
         .groupBy("doc_id", "bench_id")
@@ -1215,7 +1155,7 @@ def neardup_components(
     ``max_bucket_size=SCALE_MAX_BUCKET_SIZE`` drops degenerate LSH
     buckets before pair expansion. Pass ``None`` for exact reference
     semantics, or ``salt_chunk`` to keep hot buckets but spread their
-    expansion (:func:`_bucket_pairs_salted`). The Jaccard verify stage
+    expansion (``_bucket_pairs(chunk=…)``). The Jaccard verify stage
     here is the candidate-restricted path, which is always exact — no
     posting-list expansion exists to cap.
     """
@@ -1287,7 +1227,7 @@ def allpairs_jaccard_join(
     generation is cheaper. Plan: shingle stream shuffles once for the
     df-counts, once for the per-doc rank window; prefix postings are
     a strict subset of the full postings; the pair expansion is the
-    :func:`_bucket_pairs` HOF pattern over ``(id, n)`` structs, so
+    :func:`_bucket_pairs` expansion over ``(id, n)`` structs, so
     the length filter consumes the count carried on each posting
     entry — no broadcast, no extra join. At t = 0.8 the indexed prefix is ~20% of
     each doc — a ~25× pair-stream reduction on boilerplate-heavy
@@ -1324,7 +1264,7 @@ def allpairs_jaccard_join(
         ).alias("ids")
     )
     cand_lf = (
-        _bucket_pairs_carrying_n(posting)
+        _bucket_pairs(posting)
         # length filter: t·max ≤ min  ⇔  t·|A| ≤ |B| ≤ |A|/t
         .filter(
             F.lit(threshold) * F.greatest("_na", "_nb")
@@ -1335,11 +1275,9 @@ def allpairs_jaccard_join(
     )
     # prefix-filter candidates are NOT bounded by construction (a
     # boilerplate-heavy corpus at a low threshold emits a pair-stream-
-    # sized set) — never force-broadcast them; AQE picks broadcast at
-    # runtime whenever the actual set is small
+    # sized set) — the verifier merge-pins them
     return ngram_jaccard_pairs(
-        df, text_col, k, threshold=threshold, candidates=cand_lf,
-        broadcast_candidates=False,
+        df, text_col, k, threshold=threshold, candidates=cand_lf
     )
 
 
@@ -1601,60 +1539,19 @@ def decontaminate(
     """
     sig_t = minhash_signatures(train, text_col, n_hashes, k)
     sig_e = minhash_signatures(eval_df, text_col, n_hashes, k)
-    bt = band_rows(sig_t, n_hashes, band_size).withColumnRenamed(
-        "doc_id", "train_id"
+    bt = band_rows(sig_t, n_hashes, band_size).withColumnRenamed("doc_id", "doc_a")
+    be = band_rows(sig_e, n_hashes, band_size).withColumnRenamed("doc_id", "doc_b")
+    cand = bt.join(be, ["band_idx", "band_key"]).select("doc_a", "doc_b").distinct()
+    st = shingle_sets(_candidate_docs(train, cand, ("doc_a",)), text_col, k)
+    se = shingle_sets(_candidate_docs(eval_df, cand, ("doc_b",)), text_col, k)
+    return _verify_jaccard(cand, st, se, threshold).select(
+        F.col("doc_a").alias("train_id"),
+        F.col("doc_b").alias("eval_id"),
+        "n_inter",
+        "n_a",
+        "n_b",
+        "jaccard",
     )
-    be = band_rows(sig_e, n_hashes, band_size).withColumnRenamed(
-        "doc_id", "eval_id"
-    )
-    cand = (
-        bt.join(be, ["band_idx", "band_key"])
-        .select("train_id", "eval_id")
-        .distinct()
-    )
-
-    def _sets(df: DataFrame) -> DataFrame:
-        return (
-            word_shingles(df, text_col, k, distinct=False)
-            .select("doc_id", _h56(F.col("shingle")).alias("h"))
-            .groupBy("doc_id")
-            .agg(F.collect_set("h").alias("hset"))
-        )
-
-    st = _sets(
-        train.join(
-            cand.select(F.col("train_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-    ).select(F.col("doc_id").alias("train_id"), F.col("hset").alias("sa"))
-    se = _sets(
-        eval_df.join(
-            cand.select(F.col("eval_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-    ).select(F.col("doc_id").alias("eval_id"), F.col("hset").alias("sb"))
-    out = (
-        cand.join(st, "train_id")
-        .join(se, "eval_id")
-        .select(
-            "train_id",
-            "eval_id",
-            F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
-            F.size("sa").alias("n_a"),
-            F.size("sb").alias("n_b"),
-        )
-        .filter(F.col("n_inter") > 0)
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("train_id", "eval_id", "n_inter", "n_a", "n_b", "jaccard")
-    )
-    return out
 
 
 def decontaminate_survivors(

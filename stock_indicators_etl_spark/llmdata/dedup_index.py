@@ -24,8 +24,8 @@ Increment algorithm (:func:`dedup_increment`):
    old-old collision already existed in a previous run: banding is
    deterministic).
 2. exact-Jaccard-verify candidates from the stored shingle sets
-   (``array_intersect`` on a broadcast pair list — the same
-   candidate-restricted plan as :func:`..dedup.ngram_jaccard_pairs`).
+   (``array_intersect`` over merge-pinned joins — the verifier of the
+   candidate-restricted :func:`..dedup.ngram_jaccard_pairs`).
 3. merge via the QUOTIENT graph: old endpoints contract to their
    prior component label, then connected components runs over (new
    ids ∪ touched labels) only — the fixpoint never revisits the old
@@ -47,24 +47,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_indicators_etl_spark.llmdata.dedup import (
+    MH_PRIME,
+    _candidate_docs,
+    _verify_jaccard,
     band_rows,
     connected_components,
     minhash_signatures,
+    shingle_sets,
     word_shingles,
 )
-from stock_indicators_etl_spark.llmdata.hashing import h56
-
-
-def _shingle_sets(
-    df: DataFrame, text_col: str, k: int
-) -> DataFrame:
-    """(doc_id, sh_set): each doc's distinct hashed shingles."""
-    return (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("sh_set"))
-    )
 
 
 def _signatures_and_sets(
@@ -76,11 +67,9 @@ def _signatures_and_sets(
     convention, first 14 md5 hex digits) IS minhash's h1, so a single
     md5 per shingle feeds the double-hashing mins and the
     ``collect_set`` — fusing what :func:`..dedup.minhash_signatures`
-    + :func:`_shingle_sets` would compute in two scans (DESIGN §4.7,
-    hash once derive many). Bit-identical outputs to the unfused pair
-    (pinned in tests/test_dedup_index.py)."""
-    from stock_indicators_etl_spark.llmdata.dedup import MH_PRIME
-
+    + :func:`..dedup.shingle_sets` would compute in two scans (DESIGN
+    §4.7, hash once derive many). Bit-identical outputs to the unfused
+    pair (pinned in tests/test_dedup_index.py)."""
     sh = word_shingles(df, text_col, k, distinct=False)
     md = F.md5(F.col("shingle"))
     h1 = F.conv(F.substring(md, 1, 14), 16, 10).cast("long")
@@ -125,35 +114,8 @@ def write_index_shard(
     band_rows(sig, n_hashes, band_size).write.mode(mode).parquet(
         index_path + "/bands"
     )
-    _shingle_sets(docs, text_col, k).write.mode(mode).parquet(
+    shingle_sets(docs, text_col, k).write.mode(mode).parquet(
         index_path + "/shingles"
-    )
-
-
-def _verify_pairs(
-    doc_sets: DataFrame, candidates: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard over stored shingle sets for the candidate pairs
-    (same plan as the candidate-restricted ngram_jaccard_pairs)."""
-    a = doc_sets.select(F.col("doc_id").alias("doc_a"), F.col("sh_set").alias("sa"))
-    b = doc_sets.select(F.col("doc_id").alias("doc_b"), F.col("sh_set").alias("sb"))
-    return (
-        a.join(F.broadcast(candidates), "doc_a")
-        .join(b, "doc_b")
-        .select(
-            "doc_a",
-            "doc_b",
-            F.size(F.array_intersect("sa", "sb")).alias("n_inter"),
-            F.size("sa").alias("n_a"),
-            F.size("sb").alias("n_b"),
-        )
-        .withColumn(
-            "jaccard",
-            F.col("n_inter").cast("double")
-            / (F.col("n_a") + F.col("n_b") - F.col("n_inter")).cast("double"),
-        )
-        .filter(F.col("jaccard") >= F.lit(threshold))
-        .select("doc_a", "doc_b")
     )
 
 
@@ -231,13 +193,8 @@ def dedup_increment(
         .distinct()
         .persist()
     )
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .union(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    doc_sets = all_sets.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-    edges = _verify_pairs(doc_sets, cand, threshold)
+    doc_sets = _candidate_docs(all_sets, cand)
+    edges = _verify_jaccard(cand, doc_sets, doc_sets, threshold).select("doc_a", "doc_b")
 
     # quotient: contract old endpoints to their prior component label.
     # new_ids reads the PINNED per_doc frame, not new_docs: it is

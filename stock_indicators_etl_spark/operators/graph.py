@@ -367,7 +367,7 @@ def link_prediction_scores(
     vertices are the skew knob — the degree bound comes from the
     EDGE LIST the caller feeds in (a k-NN top-k graph symmetrizes to
     deg ≤ 2k, which is what ``q_link_predict`` relies on; the MinHash
-    candidate path caps via ``_bucket_pairs_salted``'s
+    candidate path caps via ``minhash_lsh_candidates``'
     ``max_bucket_size``). An uncapped edge list makes the hot
     vertex's deg² the straggler. Existing edges drop out with one
     left-anti join; degree annotation is a combinable groupBy. The

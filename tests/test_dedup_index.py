@@ -124,6 +124,18 @@ def test_write_index_shard_then_increment(spark, docs, tmp_path):
     assert _mapping(comp) == _mapping(oneshot)
 
 
+def test_shingles_layout_stays_readable(spark, docs, tmp_path):
+    """``<index>/shingles`` keeps its on-disk schema through both
+    writers (the bulk ``write_index_shard`` and the append inside
+    ``dedup_increment``), so indexes written earlier stay readable."""
+    idx = str(tmp_path / "idx")
+    write_index_shard(docs.filter(F.col("doc_id") % 2 == 0), idx)
+    dedup_increment(docs.filter(F.col("doc_id") % 2 == 1), idx, None)
+    sh = spark.read.parquet(idx + "/shingles")
+    assert sh.schema.simpleString() == "struct<doc_id:bigint,sh_set:array<bigint>>"
+    assert sh.select("doc_id").distinct().count() == sh.count() == docs.count()
+
+
 def _assert_coarsening(fine: list[tuple], coarse: list[tuple]) -> None:
     """Every group of the FINE partition sits inside one group of the
     COARSE partition (coarse never splits a fine group)."""

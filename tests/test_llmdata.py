@@ -230,7 +230,6 @@ def test_ivf_topk_recall_and_scores(spark):
 def test_salted_bucket_pairs_equal_plain(spark):
     from stock_indicators_etl_spark.llmdata.dedup import (
         _bucket_pairs,
-        _bucket_pairs_salted,
         minhash_lsh_candidates,
     )
 
@@ -242,7 +241,7 @@ def test_salted_bucket_pairs_equal_plain(spark):
     )
     plain = {tuple(r) for r in _bucket_pairs(grouped).collect()}
     for chunk in (3, 4, 16, 100):
-        salted = _bucket_pairs_salted(grouped, chunk=chunk).collect()
+        salted = _bucket_pairs(grouped, chunk=chunk).collect()
         assert len(salted) == len(plain)  # no dup pairs within a bucket
         assert {tuple(r) for r in salted} == plain
 

@@ -13,6 +13,9 @@ Measured counts from these fixtures are recorded in DESIGN.md
 
 from __future__ import annotations
 
+import itertools
+import random
+
 import pandas as pd
 import pytest
 
@@ -20,7 +23,6 @@ from stock_indicators_etl_spark.llmdata.dedup import (
     SCALE_MAX_BUCKET_SIZE,
     SCALE_MAX_DOC_FREQ,
     _bucket_pairs,
-    _bucket_pairs_salted,
     _salted_chunk_rows,
     minhash_lsh_candidates,
     neardup_components,
@@ -112,10 +114,42 @@ def test_salt_chunk_spreads_task_sizes(spark):
     assert max(max(r.na, r.nb) for r in sizes) <= 8
     salted = {
         (r.doc_a, r.doc_b)
-        for r in _bucket_pairs_salted(grouped, chunk=8).collect()
+        for r in _bucket_pairs(grouped, chunk=8).collect()
     }
     plain = {(r.doc_a, r.doc_b) for r in _bucket_pairs(grouped).collect()}
     assert salted == plain and len(plain) == 40 * 39 // 2
+
+
+@pytest.mark.parametrize("carry_n", [False, True], ids=["ids", "id_n_structs"])
+def test_bucket_pairs_match_python_reference(spark, carry_n):
+    """``_bucket_pairs`` against ``itertools.combinations`` on random
+    unsorted buckets of 0-40 elements — plain ids or ``(id, n)``
+    structs — unsalted and at chunk sizes 1, 3, b and b+1: exactly the
+    sorted pairs, each once, ``doc_a < doc_b``, and every carried ``n``
+    the one its id carries."""
+    rng = random.Random(7)
+    sizes = [0, 1, 2, 40] + [rng.randint(0, 40) for _ in range(4)]
+    # disjoint id ranges, so each pair names its bucket
+    buckets = [rng.sample(range(1000 * b, 1000 * b + 1000), n) for b, n in enumerate(sizes)]
+    n_of = {i: rng.randint(1, 99) for ids in buckets for i in ids}
+
+    def check(bs, chunk):
+        if carry_n:
+            rows = [([(i, n_of[i]) for i in ids],) for ids in bs]
+            grouped = spark.createDataFrame(rows, "ids array<struct<id:bigint,n:bigint>>")
+        else:
+            grouped = spark.createDataFrame([(ids,) for ids in bs], "ids array<bigint>")
+        got = _bucket_pairs(grouped, chunk=chunk).collect()
+        want = sorted(p for ids in bs for p in itertools.combinations(sorted(ids), 2))
+        assert sorted((r.doc_a, r.doc_b) for r in got) == want, (chunk, bs)
+        if carry_n:
+            assert all((r._na, r._nb) == (n_of[r.doc_a], n_of[r.doc_b]) for r in got)
+
+    for chunk in (None, 1, 3):
+        check(buckets, chunk)
+    for ids in buckets:
+        for chunk in {max(len(ids), 1), len(ids) + 1}:
+            check([ids], chunk)
 
 
 def test_salted_composed_pipeline_keeps_hot_bucket_groups(spark):
