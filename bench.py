@@ -179,7 +179,7 @@ def run() -> None:
 
     import __spark_entry__ as entry_mod
 
-    spark = get_spark(app_name="bench")
+    spark = get_spark(app_name="bench", long_lived=True)
     registry = entry_mod.REGISTRY
     # bench EVERY driver query and every extra (VERDICT r2 #4: cover
     # the whole green surface), minus the records marked bench=False

@@ -50,7 +50,7 @@ def main() -> int:
     from stock_indicators_etl_spark.llmdata.similarity import ivfpq_topk as _ivfpq
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="ann_recall")
+    spark = get_spark(app_name="ann_recall", long_lived=True)
 
     def _suite(emb, q, title):
         exact = _topk_sets(cosine_topk(emb, q, k=k).collect(), "nbr_id", k)

@@ -33,7 +33,7 @@ def main() -> int:
     from stock_indicators_etl_spark.llmdata.clustering import kmeans_assign
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="bigk_demo")
+    spark = get_spark(app_name="bigk_demo", long_lived=True)
     emb = spark.read.parquet(str(SF1 / "embeddings.parquet"))
 
     t0 = time.perf_counter()

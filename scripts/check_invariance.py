@@ -169,7 +169,7 @@ def main() -> int:
 
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="check_invariance")
+    spark = get_spark(app_name="check_invariance", long_lived=True)
     failures = sweep(spark, sf_dir, only, fold_axis=fold_axis)
     axis = "fold (perturbed + AQE flipped)" if fold_axis else "partitioning"
     if failures:

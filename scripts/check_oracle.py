@@ -100,7 +100,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="check_oracle")
+    spark = get_spark(app_name="check_oracle", long_lived=True)
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"

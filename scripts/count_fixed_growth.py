@@ -47,7 +47,7 @@ def main() -> int:
     )
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="count_fixed_growth")
+    spark = get_spark(app_name="count_fixed_growth", long_lived=True)
     out: dict[str, dict[str, int]] = {}
 
     for tag, d in (

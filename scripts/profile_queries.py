@@ -91,7 +91,7 @@ def main() -> int:
 
     import __spark_entry__ as entry_mod
 
-    spark = get_spark(app_name="profile")
+    spark = get_spark(app_name="profile", long_lived=True)
     queries = {**entry_mod.queries(), **entry_mod.extra_queries()}
 
     sc = spark.sparkContext

@@ -288,7 +288,7 @@ def main() -> int:
     import __spark_entry__ as entry_mod
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="scaling_sweep")
+    spark = get_spark(app_name="scaling_sweep", long_lived=True)
     queries = sweep_queries(entry_mod)
 
     have_sf1 = Path(SF1_DIR, "documents.parquet").exists()

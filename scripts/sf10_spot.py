@@ -170,7 +170,7 @@ def main() -> int:
     from scaling_sweep import sweep_queries
     from stock_indicators_etl_spark.session import get_spark
 
-    spark = get_spark(app_name="sf10_spot")
+    spark = get_spark(app_name="sf10_spot", long_lived=True)
     queries = sweep_queries(entry_mod)
     # _fixed fixture variants share their base query's builder and
     # construction protocol

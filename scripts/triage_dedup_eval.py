@@ -121,7 +121,7 @@ def measure(spark, sf_dir: str) -> dict:
 
 
 def main() -> None:
-    spark = get_spark(master="local[32]", shuffle_partitions=32)
+    spark = get_spark(master="local[32]", shuffle_partitions=32, long_lived=True)
     rows = {}
     for name, sf_dir in SFS:
         rows[name] = measure(spark, sf_dir)

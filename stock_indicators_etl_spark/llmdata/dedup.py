@@ -873,7 +873,8 @@ def simhash_neardup(
             .select("band_idx", "band_val")
         )
         # bucket-size frame is NOT bounded by construction — never
-        # force-broadcast (DESIGN §4.23); AQE decides from real sizes
+        # force-broadcast (DESIGN §4.23); the merge pin holds at run
+        # time too (AQE keeps a hinted sort-merge join, §4.34)
         a = a.join(ok.hint("merge"), ["band_idx", "band_val"], "left_semi")
     ham = F.bit_count(F.col("_fa").bitwiseXOR(F.col("_fb")))
     return (
@@ -901,7 +902,8 @@ def dup_fraction(
     Plan: distinct (doc, gram-hash) stream → ONE combinable count
     per hash for doc frequency → LEFT join of the duplicated-hash
     set back (merge-pinned — the set is corpus-derived, never
-    force-broadcast; AQE re-broadcasts when genuinely small) → one
+    force-broadcast; AQE keeps the pin even when the set is small,
+    DESIGN §4.34) → one
     per-doc combinable aggregate. ``dup_frac`` is one IEEE division
     of exact integers; empty/short docs report 0 grams and NULL
     fraction.
@@ -1242,8 +1244,8 @@ def allpairs_jaccard_join(
     # df_tbl is one row per DISTINCT SHINGLE — vocabulary-scaling
     # (billions at corpus scale), and the static planner's estimate
     # for it is garbage; pin the rank join to SMJ (it shares the
-    # groupBy(h) exchange anyway) and let AQE re-broadcast from real
-    # sizes at small SFs
+    # groupBy(h) exchange anyway). AQE keeps the pin at small SFs too
+    # (DESIGN §4.34): a sort instead of a broadcast there
     ranked = stream.join(df_tbl.hint("merge"), "h")
     wd = Window.partitionBy("doc_id").orderBy(F.col("_df").asc(), F.col("h").asc())
     sized = ranked.withColumn("_pos", F.row_number().over(wd)).withColumn(
@@ -1630,8 +1632,9 @@ def dup_span_audit(
     )
     # the duplicated-hash set scales with the corpus — never a
     # broadcast CLASS (DESIGN §4.23), and the static planner's size
-    # estimate for it is garbage. Pin to merge; AQE re-broadcasts at
-    # runtime from real shuffle sizes when it is genuinely small.
+    # estimate for it is garbage. Pin to merge; AQE keeps the pin
+    # even when the set is small (DESIGN §4.34), so small inputs pay
+    # a sort instead of a broadcast.
     covered = pos.join(dup.hint("merge"), "gh", "left_semi")
     isl = covered.withColumn(
         "_grp",

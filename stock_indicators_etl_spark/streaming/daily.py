@@ -21,6 +21,8 @@ from __future__ import annotations
 import argparse
 import sys
 
+from pyspark.errors import AnalysisException
+
 from stock_indicators_etl_spark.config import IndicatorConfig
 from stock_indicators_etl_spark.operators.pipeline import generate_indicators
 from stock_indicators_etl_spark.session import get_spark
@@ -58,8 +60,13 @@ def run_indicators(args: argparse.Namespace) -> int:
     spark = get_spark(app_name="generate_indicators")
     try:
         bars = read_bars_day(spark, args.src, args.interval, args.execution_date)
-    except Exception:
-        # missing day → skip (reference behavior, data_indicators.py:37-39)
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        bars = None
+    # missing day → skip (reference behavior, data_indicators.py:37-39):
+    # no store yet, or a store without this day's partition
+    if bars is None or bars.isEmpty():
         print(f"no input for {args.execution_date}; skipping")
         return 0
     out = generate_indicators(bars, IndicatorConfig(), date=args.execution_date)
@@ -81,7 +88,7 @@ def run_backfill(args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     NS = 1_000_000_000
-    spark = get_spark(app_name="backfill_indicators")
+    spark = get_spark(app_name="backfill_indicators", long_lived=True)
     cfg = IndicatorConfig()
     bars = (
         spark.read.parquet(args.src)

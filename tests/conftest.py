@@ -11,7 +11,9 @@ NS = 1_000_000_000
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", master="local[4]", shuffle_partitions=4)
+    s = get_spark(
+        app_name="tests", master="local[4]", shuffle_partitions=4, long_lived=True
+    )
     yield s
 
 

@@ -407,6 +407,50 @@ def test_env_config_source_no_path_flags(spark, tmp_path, monkeypatch):
     assert out.count() > 0
 
 
+def test_indicators_missing_day_is_clean_noop(spark, tmp_path, monkeypatch, capsys):
+    """A day with no input skips and writes nothing, whether the store
+    does not exist yet or exists without that day's partition
+    (reference skip, data_indicators.py:37-39)."""
+    import os
+
+    import stock_indicators_etl_spark.streaming.daily as daily
+
+    base, dst = str(tmp_path / "bars"), str(tmp_path / "feat")
+    monkeypatch.setattr(daily, "get_spark", lambda **kw: spark)
+
+    def indicators(day):
+        rc = daily.main(["indicators", "--execution_date", day, "--src", base, "--dst", dst])
+        assert rc == 0
+        assert f"no input for {day}; skipping" in capsys.readouterr().out
+        assert not os.path.exists(dst)
+
+    indicators("2024-01-02")  # no store yet
+    assert daily.main(
+        ["download", "--execution_date", "2024-01-02", "--base", base, "--synthetic"]
+    ) == 0
+    indicators("2024-01-03")  # the store exists without this day
+
+
+def test_indicators_unreadable_store_fails(spark, tmp_path, monkeypatch, capsys):
+    """Any read failure other than a missing path fails the task
+    instead of passing for "no input"."""
+    import os
+
+    import stock_indicators_etl_spark.streaming.daily as daily
+
+    base, dst = tmp_path / "bars", str(tmp_path / "feat")
+    base.mkdir()
+    (base / "part-00000.parquet").write_bytes(b"not a parquet file")
+    monkeypatch.setattr(daily, "get_spark", lambda **kw: spark)
+    with pytest.raises(Exception):
+        daily.main(
+            ["indicators", "--execution_date", "2024-01-02",
+             "--src", str(base), "--dst", dst]
+        )
+    assert "skipping" not in capsys.readouterr().out
+    assert not os.path.exists(dst)
+
+
 def test_reference_layout_roundtrip(spark, tmp_path):
     """write_reference_layout_day produces the literal single-file
     layout the reference tool reads and writes — pandas and the
