@@ -120,6 +120,9 @@ def test_no_env_var_secrets():
     endpoints sneak in."""
     allowed = re.compile(
         r"^(SPARK_GRAFT_\w+|JAVA_HOME|SPARK_\w+|PYSPARK_\w+|TZ|HOME|PATH|TMPDIR"
+        # the XDG base-dir cache root, where get_spark keeps its
+        # class-data archives: a local directory, not an endpoint
+        r"|XDG_CACHE_HOME"
         # the reference's own env config surface (SURVEY §2 S6):
         # local output directories, not endpoints
         r"|YAHOO_BASE|INDICATOR_BASE)$"
