@@ -1057,8 +1057,10 @@ def connected_components(
     result is deterministic regardless of execution order (and
     SQL-replayable with a recursive CTE).
 
-    Both methods pin the edge list once and then run their round
-    through :func:`~stock_indicators_etl_spark.operators.graph.converge`:
+    Both methods pin the edge list once, so its lineage runs once
+    (``label`` emits both directions in one pass over the edges;
+    ``star`` pins its canonical pairs), and then run their round through
+    :func:`~stock_indicators_etl_spark.operators.graph.converge`:
     each round's state is a lazy ``localCheckpoint`` and a one-row
     xxhash64 checksum over it is the round's only action (it also
     materialises the pin), so no data is collected, plan depth
@@ -1103,14 +1105,21 @@ def connected_components(
             star.select(F.col("v").alias("_id"), F.col("v").alias("component"))
         ).distinct()
     else:
-        # pin the edge list before iterating: it is joined once per
-        # round, and an unpinned edge lineage (e.g. the whole
-        # LSH→Jaccard verify chain) would recompute in EVERY round
-        e = edges.select(
-            F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
-        ).unionByName(
-            edges.select(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d"))
-        ).localCheckpoint(eager=True)
+        # pin both directions in one pass over the edge list: a pin of
+        # ``edges ∪ reversed(edges)`` runs the edge lineage (e.g. the
+        # whole LSH→Jaccard verify chain) once per side of the union,
+        # and an unpinned one would recompute in EVERY round. The filter
+        # restates the not-null constraints that the pinned union kept
+        # and ``inline`` drops, so the rounds plan as before (AQE reuses
+        # the same exchanges); a null end never joins (DESIGN §4.37)
+        e = (
+            edges.select(F.inline(F.array(
+                F.struct(F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")),
+                F.struct(F.col(dst_col).alias("_s"), F.col(src_col).alias("_d")),
+            )))
+            .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
+            .localCheckpoint(eager=True)
+        )
 
         def label_round(labels: DataFrame) -> DataFrame:
             msgs = e.join(labels, e["_s"] == labels["_id"]).select(

@@ -31,7 +31,9 @@ single JVM) but every knob here is chosen to also make sense on a
   An archive is promoted only after a clean JVM exit and a header check,
   a JVM never gets a file whose regions run past its end, and an
   archive the JVM did not map (``/proc/<pid>/maps``) is reported and
-  deleted. A key whose recording failed gets one more attempt.
+  deleted. A key whose recording failed gets one more attempt. Another
+  key's archive that no session chose for 30 days is deleted when a new
+  archive is promoted.
 """
 
 from __future__ import annotations
@@ -45,6 +47,7 @@ import shutil
 import struct
 import subprocess
 import sys
+import time
 
 from pyspark import SparkContext
 from pyspark.find_spark_home import _find_spark_home
@@ -62,6 +65,11 @@ _RECORD_WAIT_S = 120
 # Recordings started for a key since its archive was last seen mapped;
 # a key that reaches this count is not recorded again.
 _MAX_RECORDINGS = 2
+# A session that chooses an archive refreshes its mtime; when a new
+# archive is promoted, other keys' archives and recording counts older
+# than this are deleted (a JDK, jar or JVM-option change leaves the old
+# key's 140–174 MB archive behind).
+_KEEP_UNUSED_S = 30 * 24 * 3600
 # JDK 17's archive header (hotspot/share/include/cds.h, version 11):
 # magic, crc, version, then 7 regions of six ints and six 8-byte words,
 # of which the 7th and 9th fields are the region's file offset and size.
@@ -177,6 +185,8 @@ class _ClassDataSharing:
     def _choose(self) -> bool:
         if os.path.exists(self.archive):
             if _archive_complete(self.archive):
+                with contextlib.suppress(OSError):
+                    os.utime(self.archive)  # in use: kept by _remove_stale_keys
                 return True
             _say(f"{self.archive} is truncated or unreadable; deleting it")
             os.remove(self.archive)
@@ -209,6 +219,20 @@ class _ClassDataSharing:
                     os.remove(os.path.join(self.dir, name))
             except OSError:
                 pass  # alive, another user's
+
+    def _remove_stale_keys(self) -> None:
+        """Other keys' archives and recording counts that no session
+        chose (or started recording) within ``_KEEP_UNUSED_S``."""
+        cutoff = time.time() - _KEEP_UNUSED_S
+        own = os.path.basename(self.archive)[: -len(".jsa")]
+        for name in os.listdir(self.dir):
+            key, ext = os.path.splitext(name)
+            if key == own or ext not in (".jsa", ".recordings"):
+                continue
+            path = os.path.join(self.dir, name)
+            with contextlib.suppress(OSError):  # another process's cleanup
+                if os.path.getmtime(path) < cutoff:
+                    os.remove(path)
 
     def java_options(self) -> str:
         if self.part is None:
@@ -251,6 +275,7 @@ class _ClassDataSharing:
                 proc.wait()
         if proc.returncode == 0 and _archive_complete(self.part):
             os.replace(self.part, self.archive)
+            self._remove_stale_keys()
             return
         with contextlib.suppress(OSError):
             os.remove(self.part)

@@ -380,6 +380,33 @@ def test_connected_components_leaves_no_cached_frames(spark, method):
         assert cache.isEmpty(), f"chain of {n}: cached frames left behind"
 
 
+@pytest.mark.parametrize("method", ["label", "star"])
+def test_connected_components_reads_edge_lineage_once(spark, method):
+    """The edge frame's lineage (in the pipeline: LSH candidates and the
+    Jaccard verify) runs once per call. A pin of ``edges ∪
+    reversed(edges)`` ran it once per side of the union."""
+    from stock_indicators_etl_spark.llmdata.dedup import connected_components
+
+    produced = spark.sparkContext.accumulator(0)
+
+    def count_rows(batches):
+        for pdf in batches:
+            produced.add(len(pdf))
+            yield pdf
+
+    pairs = [(1, 2), (2, 3), (10, 11), (11, 12), (10, 12), (20, 21)]
+    edges = spark.createDataFrame(pairs, "doc_a long, doc_b long").mapInPandas(
+        count_rows, "doc_a long, doc_b long"
+    )
+    verts = spark.createDataFrame([(i,) for i in range(25)], "doc_id long")
+    got = {
+        r.doc_id: r.component
+        for r in connected_components(edges, verts, method=method).collect()
+    }
+    assert got[3] == 1 and got[12] == 10 and got[21] == 20 and got[24] == 24
+    assert produced.value == len(pairs)
+
+
 def test_connected_components_shapes(spark):
     """Chain, triangle, singleton, and two-component graphs all reach
     the unique min-label fixpoint."""

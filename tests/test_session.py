@@ -14,12 +14,23 @@ import atexit
 import json
 import os
 import shutil
+import struct
 import subprocess
 import sys
+import time
 
 import pytest
 
-from stock_indicators_etl_spark.session import _ClassDataSharing, _archive_complete, get_spark
+from stock_indicators_etl_spark.session import (
+    _CDS_VERSION,
+    _DYNAMIC_MAGIC,
+    _KEEP_UNUSED_S,
+    _REGION,
+    _REGIONS_AT,
+    _ClassDataSharing,
+    _archive_complete,
+    get_spark,
+)
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -212,3 +223,39 @@ def test_conf_dir_with_real_file_gives_no_flags(tmp_path, monkeypatch, capsys):
     assert _ClassDataSharing.plan(conf) is None
     assert "spark-defaults.conf" in capsys.readouterr().err
     assert not (tmp_path / "cache").exists()
+
+
+def _fake_archive(path: str, nbytes: int = 4096) -> None:
+    """A file with a JDK 17 dynamic-archive header whose one region
+    spans the file: enough for ``_archive_complete``, no JVM needed."""
+    head = struct.pack("<IiI", _DYNAMIC_MAGIC, 0, _CDS_VERSION).ljust(_REGIONS_AT, b"\0")
+    region = _REGION.pack(0, 0, 0, 0, 0, 0, 0, 0, nbytes, 0, 0, 0)
+    with open(path, "wb") as f:
+        f.write((head + region).ljust(nbytes, b"\0"))
+
+
+def test_archives_of_old_keys_are_deleted(cache):
+    """Choosing an archive refreshes its mtime; promoting a new archive
+    deletes other keys' archives and recording counts that no session
+    chose within ``_KEEP_UNUSED_S``, and keeps the rest."""
+    day = 24 * 3600
+    old = time.time() - _KEEP_UNUSED_S - day
+    for name, age in [("stale.jsa", old), ("stale.recordings", old),
+                      ("failed.recordings", old), ("recent.jsa", time.time() - day),
+                      ("recent.recordings", time.time() - day), ("chosen.jsa", old)]:
+        path = os.path.join(cache.dir, name)
+        _fake_archive(path)
+        os.utime(path, (old, age))
+
+    chosen = _ClassDataSharing("chosen")
+    assert chosen._choose() and chosen.part is None
+    assert time.time() - os.path.getmtime(chosen.archive) < day
+
+    assert cache._choose() and cache.part is not None
+    _fake_archive(cache.part)
+    waiting = [sys.executable, "-c", "import sys; sys.stdin.read()"]
+    cache._finish_recording(subprocess.Popen(waiting, stdin=subprocess.PIPE))
+    assert _archive_complete(cache.archive)
+    assert sorted(os.listdir(cache.dir)) == sorted(
+        ["k.jsa", "k.recordings", "chosen.jsa", "recent.jsa", "recent.recordings"]
+    )
