@@ -16,16 +16,20 @@ program with a DuckDB-portable formulation:
 - **connected components** over verified near-dup pairs
   (:func:`connected_components`): min-label propagation or
   large-star/small-star to a unique fixpoint — the step that turns
-  pairwise matches into dedup groups and survivors. Both rounds run
-  through ``operators.graph.converge``: one lazy ``localCheckpoint``
-  per round, materialised by the one-row checksum that is the
-  round's only action.
+  pairwise matches into dedup groups and survivors. An edge list
+  within the broadcast bound is labelled on the driver by union–find
+  in one job; larger ones run either round through
+  ``operators.graph.converge``: one lazy ``localCheckpoint`` per
+  round, materialised by the one-row checksum that is the round's
+  only action.
 
-The posting/MinHash family shares three pieces, one copy each:
+The posting/MinHash family shares four pieces, one copy each:
 :func:`_bucket_pairs` is the in-bucket pair expansion (plain ids or
 ``(id, n)`` structs, optionally salted by ``chunk``) behind LSH
 buckets, shingle postings, winnowing and the AllPairs prefix index;
-:func:`shingle_sets` builds every per-doc ``(doc_id, sh_set)``; and
+:func:`doc_hashes` is the one per-doc aggregate of shingle hashes,
+whose projections :func:`shingle_sets` (every per-doc
+``(doc_id, sh_set)``) and :func:`minhash_signatures` are; and
 :func:`_verify_jaccard` is the one merge-pinned candidate verifier
 (``ngram_jaccard_pairs(candidates=…)``, :func:`decontaminate`,
 ``dedup_index.dedup_increment``), with the Jaccard ratio written once
@@ -44,7 +48,7 @@ from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegralType, StringType, StructField, StructType
 
 from stock_indicators_etl_spark.llmdata.hashing import h56 as _h56
 from stock_indicators_etl_spark.llmdata.text import norm_text, spread, words
@@ -560,19 +564,16 @@ def word_shingles(
 def shingle_sets(df: DataFrame, text_col: str = "text", k: int = 3) -> DataFrame:
     """``(doc_id, sh_set)``: each doc's distinct word k-gram shingles as
     56-bit md5 hashes (``hashing.h56``, the same hashing as the
-    oracle). The shingle stream never shuffles at full width: it is
-    hashed scan-side and deduped by one map-side-combined
-    ``groupBy(doc_id).collect_set``. The one set builder behind every
-    Jaccard / containment operator here and the ``<index>/shingles``
-    layout of :mod:`.dedup_index` (whose readers depend on the column
-    name ``sh_set``). Docs without a shingle get no row.
+    oracle). The set projection of :func:`doc_hashes`: column pruning
+    drops the MinHash aggregates, so the shingle stream is hashed
+    scan-side and deduped by one map-side-combined
+    ``groupBy(doc_id).collect_set`` and never shuffles at full width.
+    The one set builder behind every Jaccard / containment operator
+    here and the ``<index>/shingles`` layout of :mod:`.dedup_index`
+    (whose readers depend on the column name ``sh_set``). Docs without
+    a shingle get no row.
     """
-    return (
-        word_shingles(df, text_col, k, distinct=False)
-        .select("doc_id", _h56(F.col("shingle")).alias("h"))
-        .groupBy("doc_id")
-        .agg(F.collect_set("h").alias("sh_set"))
-    )
+    return doc_hashes(df, text_col, 0, k).select("doc_id", "sh_set")
 
 
 #: Double-hashing parameters: one md5 per shingle yields two 56-bit
@@ -600,27 +601,51 @@ SCALE_MAX_DOC_FREQ = 64
 SCALE_MAX_BUCKET_SIZE = 512
 
 
+def doc_hashes(
+    df: DataFrame, text_col: str = "text", n_hashes: int = 12, k: int = 3
+) -> DataFrame:
+    """``(doc_id, sh_set, mh_0..mh_{n-1})`` from one scan and one
+    ``groupBy(doc_id)``: the per-doc shingle-hash set and the MinHash
+    signature share one md5 per shingle, because ``hashing.h56`` (the
+    Jaccard-verify hash) IS the double-hashing ``h1`` (DESIGN §4.7,
+    §4.38). :func:`shingle_sets` and :func:`minhash_signatures` are its
+    projections — column pruning removes the unused aggregates, so
+    their plans are those of the separate builders. A consumer that
+    reads both halves of one materialised frame (the incremental
+    index persists it) scans and shingles the corpus once; where the
+    halves feed separate branches of one plan, as in
+    :func:`neardup_components`, column pruning splits the aggregate
+    and each branch scans and shingles the corpus for its own half.
+    ``h`` and ``h1`` are the same value under the two names those
+    plans have always used.
+    """
+    # duplicate shingles cannot change a min or a set — skip the
+    # full-width distinct() shuffle of the 50× exploded stream; the
+    # only shuffle left is the map-side-combined groupBy
+    sh = word_shingles(df, text_col, k, distinct=False)
+    h1 = _h56(F.col("shingle"))
+    h2 = F.conv(F.substring(F.md5(F.col("shingle")), 17, 14), 16, 10).cast("long")
+    hashed = sh.select("doc_id", h1.alias("h"), h1.alias("h1"), h2.alias("h2"))
+    aggs = [
+        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MH_PRIME)).alias(f"mh_{i}")
+        for i in range(n_hashes)
+    ]
+    return hashed.groupBy("doc_id").agg(F.collect_set("h").alias("sh_set"), *aggs)
+
+
 def minhash_signatures(
     df: DataFrame, text_col: str = "text", n_hashes: int = 12, k: int = 3
 ) -> DataFrame:
     """Per-doc MinHash signature via the classic double-hashing
     construction: g_i(s) = (h1(s) + i·h2(s)) mod P, one md5 per
     shingle instead of one per (shingle, permutation) — 12× fewer
-    hash evaluations. Output: doc_id, mh_0..mh_{n-1} (BIGINT).
+    hash evaluations. Output: doc_id, mh_0..mh_{n-1} (BIGINT). The
+    signature projection of :func:`doc_hashes` (the set aggregate is
+    pruned away).
     """
-    # duplicate shingles cannot change a min — skip the full-width
-    # distinct() shuffle of the 50× exploded stream; the only shuffle
-    # left in signature-building is the map-side-combined groupBy
-    sh = word_shingles(df, text_col, k, distinct=False)
-    md = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(md, 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md, 17, 14), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MH_PRIME)).alias(f"mh_{i}")
-        for i in range(n_hashes)
-    ]
-    return hashed.groupBy("doc_id").agg(*aggs)
+    return doc_hashes(df, text_col, n_hashes, k).select(
+        "doc_id", *[f"mh_{i}" for i in range(n_hashes)]
+    )
 
 
 def minhash_lsh_candidates(
@@ -1039,6 +1064,83 @@ def _star_round(edges: DataFrame) -> DataFrame:
     )
 
 
+#: Most pinned edge rows :func:`connected_components` labels on the
+#: driver, whatever the broadcast threshold allows: 2^20 rows of two
+#: longs are 16 MiB as Arrow, about 160 MiB of numpy arrays at the
+#: union–find's peak, and the distributed loop is slower at every size
+#: measured up to this one (``plans/pr14/cc_paths_timing.txt``).
+UNION_FIND_MAX_ROWS = 1 << 20
+
+
+def _union_find_bound(edges: DataFrame) -> int | None:
+    """How many pinned edge rows the driver-side union–find may take:
+    the bytes of the session's ``spark.sql.autoBroadcastJoinThreshold``
+    over the bytes of one edge row (the schema's default size), capped
+    at :data:`UNION_FIND_MAX_ROWS` — a threshold raised for join tuning
+    must not bring a large graph to the driver. ``None`` (the
+    distributed loop runs) for a threshold of ``-1``, for ids that are
+    neither integers nor binary-collated strings (numpy would order
+    them differently from Spark's ``min``) and for a session without
+    JVM handles (Spark Connect)."""
+    id_type = edges.schema[0].dataType
+    if not (isinstance(id_type, IntegralType) or id_type == StringType()):
+        return None
+    try:
+        conf = edges.sparkSession._jsparkSession.sessionState().conf()
+        limit = conf.autoBroadcastJoinThreshold()
+        row_bytes = edges._jdf.schema().defaultSize()
+    except Exception:
+        return None
+    if limit < 0:
+        return None
+    return min(limit // row_bytes, UNION_FIND_MAX_ROWS)
+
+
+def _union_find_labels(edges: DataFrame) -> DataFrame | None:
+    """``(_id, component)`` for every end of the pinned two-column edge
+    list, labelled on the driver by union–find with the smallest id as
+    the root — or ``None`` when the list is longer than
+    :func:`_union_find_bound`, and the caller's distributed loop runs
+    instead.
+
+    One ``limit(bound + 1)`` Arrow collect reads the pin, so at most
+    ``bound + 1`` rows reach the driver, at their Arrow width. The ids
+    are ranked by ``np.unique`` (sorted, so a component's smallest rank
+    is its minimum id) and the union–find runs over the ranks as whole
+    arrays: every root hooks onto the smallest root across its edges,
+    then every pointer jumps to its root, until no edge joins two
+    roots. The labels come back as an Arrow table, which Spark reads
+    without a Python worker task.
+    """
+    import numpy as np
+    import pyarrow as pa
+
+    bound = _union_find_bound(edges)
+    if bound is None:
+        return None
+    table = edges.limit(bound + 1).toArrow()
+    if table.num_rows > bound:
+        return None
+    ends = [c.to_numpy(zero_copy_only=False) for c in table.columns]
+    ids, rank = np.unique(np.concatenate(ends), return_inverse=True)
+    a, b = rank[: table.num_rows], rank[table.num_rows :]
+    root = np.arange(len(ids))
+    while True:
+        ra, rb = root[a], root[b]
+        cross = ra != rb
+        if not cross.any():
+            break
+        np.minimum.at(root, np.maximum(ra, rb)[cross], np.minimum(ra, rb)[cross])
+        while not np.array_equal(jumped := root[root], root):
+            root = jumped
+    id_type = edges.schema[0].dataType
+    schema = StructType(
+        [StructField("_id", id_type), StructField("component", id_type)]
+    )
+    labels = pa.table({"_id": ids, "component": ids[root]})
+    return edges.sparkSession.createDataFrame(labels, schema)
+
+
 def connected_components(
     edges: DataFrame,
     vertices: DataFrame,
@@ -1059,15 +1161,28 @@ def connected_components(
 
     Both methods pin the edge list once, so its lineage runs once
     (``label`` emits both directions in one pass over the edges;
-    ``star`` pins its canonical pairs), and then run their round through
-    :func:`~stock_indicators_etl_spark.operators.graph.converge`:
-    each round's state is a lazy ``localCheckpoint`` and a one-row
-    xxhash64 checksum over it is the round's only action (it also
-    materialises the pin), so no data is collected, plan depth
-    stays one round and nothing is left in the session cache. An
-    unchanged checksum is the fixpoint; a budget of ``max_iter``
-    rounds that runs out raises ``RuntimeError`` instead of returning
-    mid-propagation labels (which would silently split components).
+    ``star`` pins its canonical pairs). Two paths follow the pin
+    (DESIGN §4.38):
+
+    - **bounded**: when the pin holds no more rows than a broadcast
+      build may (``spark.sql.autoBroadcastJoinThreshold`` bytes over
+      the bytes of one edge row), one ``limit(bound + 1)`` collect
+      brings it to the driver, union–find labels it with the minimum
+      id as the root, and the labels return as a local relation — one
+      collect, no rounds (:func:`_union_find_labels`). A threshold of
+      ``-1`` turns this path off.
+    - **distributed**, for larger graphs: the method's round runs
+      through :func:`~stock_indicators_etl_spark.operators.graph.converge`.
+      Each round's state is a lazy ``localCheckpoint`` and a one-row
+      xxhash64 checksum over it is the round's only action (it also
+      materialises the pin), so no data is collected and plan depth
+      stays one round. An unchanged checksum is the fixpoint; a budget
+      of ``max_iter`` rounds that runs out raises ``RuntimeError``
+      instead of returning mid-propagation labels (which would
+      silently split components). ``max_iter`` bounds only this path.
+
+    Neither path leaves anything in the session cache, and both give
+    the same labels.
 
     ``method="label"`` (default): min-label propagation over the
     subgraph touched by edges — vertices with no edges never enter
@@ -1097,13 +1212,15 @@ def connected_components(
             .distinct()
             .localCheckpoint(eager=True)
         )
-        star = converge(canon, _star_round, ("u", "v"), max_iter, what)
-        # star edges: (leaf u → center v); centers label themselves
-        labels = star.select(
-            F.col("u").alias("_id"), F.col("v").alias("component")
-        ).unionByName(
-            star.select(F.col("v").alias("_id"), F.col("v").alias("component"))
-        ).distinct()
+        labels = _union_find_labels(canon)
+        if labels is None:
+            star = converge(canon, _star_round, ("u", "v"), max_iter, what)
+            # star edges: (leaf u → center v); centers label themselves
+            labels = star.select(
+                F.col("u").alias("_id"), F.col("v").alias("component")
+            ).unionByName(
+                star.select(F.col("v").alias("_id"), F.col("v").alias("component"))
+            ).distinct()
     else:
         # pin both directions in one pass over the edge list: a pin of
         # ``edges ∪ reversed(edges)`` runs the edge lineage (e.g. the
@@ -1120,22 +1237,24 @@ def connected_components(
             .filter(F.col("_s").isNotNull() & F.col("_d").isNotNull())
             .localCheckpoint(eager=True)
         )
+        labels = _union_find_labels(e)
+        if labels is None:
 
-        def label_round(labels: DataFrame) -> DataFrame:
-            msgs = e.join(labels, e["_s"] == labels["_id"]).select(
-                F.col("_d").alias("_id"), "component"
-            )
-            return (
-                labels.unionByName(msgs)
-                .groupBy("_id")
-                .agg(F.min("component").alias("component"))
-            )
+            def label_round(labels: DataFrame) -> DataFrame:
+                msgs = e.join(labels, e["_s"] == labels["_id"]).select(
+                    F.col("_d").alias("_id"), "component"
+                )
+                return (
+                    labels.unionByName(msgs)
+                    .groupBy("_id")
+                    .agg(F.min("component").alias("component"))
+                )
 
-        # iterate ONLY over edge endpoints; everything else is a singleton
-        start = e.select(F.col("_s").alias("_id")).distinct().select(
-            "_id", F.col("_id").alias("component")
-        )
-        labels = converge(start, label_round, ("_id", "component"), max_iter, what)
+            # iterate ONLY over edge endpoints; everything else is a singleton
+            start = e.select(F.col("_s").alias("_id")).distinct().select(
+                "_id", F.col("_id").alias("component")
+            )
+            labels = converge(start, label_round, ("_id", "component"), max_iter, what)
     v = vertices.select(F.col(id_col).alias("_id"))
     return v.join(labels, "_id", "left").select(
         F.col("_id").alias(id_col),
@@ -1169,14 +1288,23 @@ def neardup_components(
     expansion (``_bucket_pairs(chunk=…)``). The Jaccard verify stage
     here is the candidate-restricted path, which is always exact — no
     posting-list expansion exists to cap.
+
+    One :func:`doc_hashes` lineage feeds both the LSH bands (its
+    ``mh_*`` columns) and the Jaccard verify (its ``sh_set``): no
+    candidate semi-join, no separate set builder and nothing
+    ``persist()``ed, so the session cache is as empty after the call
+    as before it (DESIGN §4.38). Column pruning hands each branch only
+    its half of the aggregate, so the corpus is still scanned and
+    shingled twice, and the set half covers every doc, not only the
+    candidate docs. Restricting it to the candidate docs again (a
+    semi-join) gained nothing measurable where LSH names 10% of the
+    corpus. The aggregate is not pinned to share it: it is
+    corpus-sized, and a ``persist()`` of it saved nothing measurable
+    over reading its lineage in each branch.
     """
-    cand = minhash_lsh_candidates(
-        df, text_col, n_hashes, band_size, k,
-        max_bucket_size=max_bucket_size, salt_chunk=salt_chunk,
-    )
-    pairs = ngram_jaccard_pairs(
-        df, text_col, k, threshold=threshold, candidates=cand
-    ).select("doc_a", "doc_b")
+    per_doc = doc_hashes(df, text_col, n_hashes, k)
+    cand = _banded_candidates(per_doc, n_hashes, band_size, max_bucket_size, salt_chunk)
+    pairs = _verify_jaccard(cand, per_doc, per_doc, threshold).select("doc_a", "doc_b")
     return connected_components(pairs, df.select("doc_id"), method=cc_method)
 
 

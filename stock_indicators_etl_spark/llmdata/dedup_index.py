@@ -47,42 +47,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from stock_indicators_etl_spark.llmdata.dedup import (
-    MH_PRIME,
     _candidate_docs,
     _verify_jaccard,
     band_rows,
     connected_components,
+    doc_hashes,
     minhash_signatures,
     shingle_sets,
-    word_shingles,
 )
-
-
-def _signatures_and_sets(
-    df: DataFrame, text_col: str, n_hashes: int, k: int
-) -> DataFrame:
-    """One scan + one shuffle for BOTH per-doc artifacts the index
-    stores: the MinHash signature (mh_0..mh_{n-1}) and the distinct
-    shingle-hash set. The shared trick: h56 (the Jaccard-verify
-    convention, first 14 md5 hex digits) IS minhash's h1, so a single
-    md5 per shingle feeds the double-hashing mins and the
-    ``collect_set`` — fusing what :func:`..dedup.minhash_signatures`
-    + :func:`..dedup.shingle_sets` would compute in two scans (DESIGN
-    §4.7, hash once derive many). Bit-identical outputs to the unfused
-    pair (pinned in tests/test_dedup_index.py)."""
-    sh = word_shingles(df, text_col, k, distinct=False)
-    md = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(md, 1, 14), 16, 10).cast("long")
-    h2 = F.conv(F.substring(md, 17, 14), 16, 10).cast("long")
-    hashed = sh.select("doc_id", h1.alias("h1"), h2.alias("h2"))
-    aggs = [
-        F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(MH_PRIME)).alias(
-            f"mh_{i}"
-        )
-        for i in range(n_hashes)
-    ]
-    aggs.append(F.collect_set("h1").alias("sh_set"))
-    return hashed.groupBy("doc_id").agg(*aggs)
 
 
 def _index_exists(spark: SparkSession, index_path: str) -> bool:
@@ -158,7 +130,7 @@ def dedup_increment(
     # the derived streams are consumed 2-3 times each (candidate
     # join, union with the stored index, index append) and
     # recomputing would re-shingle + re-hash the shard every time
-    per_doc = _signatures_and_sets(new_docs, text_col, n_hashes, k).persist()
+    per_doc = doc_hashes(new_docs, text_col, n_hashes, k).persist()
     new_bands = band_rows(per_doc, n_hashes, band_size)
     new_sets = per_doc.select("doc_id", "sh_set")
 

@@ -8,7 +8,8 @@ documents (templates every page copies) rank high and are the ones a
 curation pass should inspect.
 
 Every loop that stops on its own (:func:`kcore`, both methods of
-``connected_components``) runs through :func:`converge`, whose round
+``connected_components`` above its driver-side union–find bound)
+runs through :func:`converge`, whose round
 is a lazy ``localCheckpoint`` of the new state plus a one-row
 checksum that both materialises it and decides convergence: plan
 depth stays one round and nothing lands in the session cache.
@@ -373,12 +374,18 @@ def link_prediction_scores(
     left-anti join; degree annotation is a combinable groupBy. The
     count and degree arithmetic are all BIGINT; ``jaccard`` is one
     IEEE divide — ranking ties are decided on the integer ``cn`` and
-    the pair id, so the float never decides alone."""
-    und = edges.select(
-        F.col(src_col).alias("a"), F.col(dst_col).alias("b")
-    ).union(
-        edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b"))
-    ).distinct()
+    the pair id, so the float never decides alone.
+
+    ``und`` is pinned eagerly: six branches read it (degrees, both
+    sides of the self-join, the anti-join), and unpinned each one
+    re-ran the symmetrisation and its ``distinct`` over the caller's
+    edge lineage (``q_link_predict``: 26 → 13 jobs at sf0.01)."""
+    und = (
+        edges.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b"))
+        .union(edges.select(F.col(dst_col).alias("a"), F.col(src_col).alias("b")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     deg = und.groupBy("a").agg(F.count(F.lit(1)).alias("deg"))
     l = und.select(F.col("b").alias("n"), F.col("a").alias("u"))
     r = und.select(F.col("b").alias("n"), F.col("a").alias("v"))

@@ -17,6 +17,26 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def cc_paths(spark):
+    """Run a connected-components test body down both of its paths:
+    ``for path in cc_paths(): ...`` yields ``"union_find"`` (the
+    session's broadcast threshold, under which a small edge list is
+    labelled on the driver) and then ``"converge"`` (threshold ``-1``,
+    the distributed fixpoint loop). The threshold is restored when the
+    test ends, also when it fails."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+
+    def paths():
+        for path, value in (("union_find", old), ("converge", "-1")):
+            spark.conf.set(key, value)
+            yield path
+
+    yield paths
+    spark.conf.set(key, old)
+
+
 def make_bars(
     tickers=("AAPL", "MSFT"),
     n=120,

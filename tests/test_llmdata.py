@@ -341,11 +341,12 @@ def test_composed_neardup_caps_and_salting(spark):
 
 
 @pytest.mark.parametrize("method", ["label", "star"])
-def test_connected_components_string_ids(spark, method):
+def test_connected_components_string_ids(spark, cc_paths, method):
     """ADVICE r2 medium: string doc_ids (common in real corpora) must
     propagate to the true fixpoint — the old decimal-cast convergence
     probe NULL'd on non-numeric ids and declared convergence after one
-    round, silently splitting long chains."""
+    round, silently splitting long chains. Both paths: the driver-side
+    union–find orders strings as Spark's ``min`` does."""
     from stock_indicators_etl_spark.llmdata.dedup import connected_components
 
     # a 6-node chain needs several propagation rounds: a one-round
@@ -355,33 +356,36 @@ def test_connected_components_string_ids(spark, method):
         pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]})
     )
     verts = spark.createDataFrame(pd.DataFrame({"doc_id": ids + ["zz-solo"]}))
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(edges, verts, method=method).collect()
-    }
-    assert got == {**{i: "doc-000" for i in ids}, "zz-solo": "zz-solo"}
+    for path in cc_paths():
+        got = {
+            r.doc_id: r.component
+            for r in connected_components(edges, verts, method=method).collect()
+        }
+        assert got == {**{i: "doc-000" for i in ids}, "zz-solo": "zz-solo"}, path
 
 
 @pytest.mark.parametrize("method", ["label", "star"])
-def test_connected_components_leaves_no_cached_frames(spark, method):
+def test_connected_components_leaves_no_cached_frames(spark, cc_paths, method):
     """Round states are lazy local checkpoints, never ``persist()``ed
-    frames, so the session cache is empty after the call returns."""
+    frames, and the union–find labels are a local relation, so the
+    session cache is empty after the call returns on either path."""
     from stock_indicators_etl_spark.llmdata.dedup import connected_components
 
     cache = spark._jsparkSession.sharedState().cacheManager()
-    for n in range(2, 10):
-        spark.catalog.clearCache()
-        edges = spark.createDataFrame(
-            [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
-        )
-        verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-        got = connected_components(edges, verts, method=method).collect()
-        assert {r.component for r in got} == {0}
-        assert cache.isEmpty(), f"chain of {n}: cached frames left behind"
+    for path in cc_paths():
+        for n in range(2, 10):
+            spark.catalog.clearCache()
+            edges = spark.createDataFrame(
+                [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+            )
+            verts = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+            got = connected_components(edges, verts, method=method).collect()
+            assert {r.component for r in got} == {0}
+            assert cache.isEmpty(), f"{path}, chain of {n}: cached frames left behind"
 
 
 @pytest.mark.parametrize("method", ["label", "star"])
-def test_connected_components_reads_edge_lineage_once(spark, method):
+def test_connected_components_reads_edge_lineage_once(spark, cc_paths, method):
     """The edge frame's lineage (in the pipeline: LSH candidates and the
     Jaccard verify) runs once per call. A pin of ``edges ∪
     reversed(edges)`` ran it once per side of the union."""
@@ -399,12 +403,14 @@ def test_connected_components_reads_edge_lineage_once(spark, method):
         count_rows, "doc_a long, doc_b long"
     )
     verts = spark.createDataFrame([(i,) for i in range(25)], "doc_id long")
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(edges, verts, method=method).collect()
-    }
-    assert got[3] == 1 and got[12] == 10 and got[21] == 20 and got[24] == 24
-    assert produced.value == len(pairs)
+    for path in cc_paths():
+        before = produced.value
+        got = {
+            r.doc_id: r.component
+            for r in connected_components(edges, verts, method=method).collect()
+        }
+        assert got[3] == 1 and got[12] == 10 and got[21] == 20 and got[24] == 24
+        assert produced.value - before == len(pairs), path
 
 
 def test_connected_components_shapes(spark):
@@ -442,6 +448,33 @@ def test_neardup_components_end_to_end(spark):
     got = {r.doc_id: r.component for r in neardup_components(docs, threshold=0.5).collect()}
     # 0/1/2 collapse into one group (transitively), 3 is a singleton
     assert got[0] == 0 and got[1] == 0 and got[2] == 0 and got[3] == 3
+
+
+def test_neardup_components_leaves_no_cached_frames(spark):
+    """The composed pipeline registers nothing in the session cache:
+    one per-doc hash aggregate feeds the bands and the verify, so no
+    ``persist()``ed candidate frame outlives the call (each call used
+    to leave one behind)."""
+    from stock_indicators_etl_spark.llmdata.dedup import neardup_components
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    docs = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [0, 1, 2, 3],
+                "text": [
+                    "the quick brown fox jumps over the lazy dog tonight",
+                    "the quick brown fox jumps over the lazy dog tonight",
+                    "the quick brown fox jumps over the lazy dog yesterday",
+                    "completely unrelated text about spark query planning",
+                ],
+            }
+        )
+    )
+    spark.catalog.clearCache()
+    got = {r.doc_id: r.component for r in neardup_components(docs).collect()}
+    assert got == {0: 0, 1: 0, 2: 0, 3: 3}
+    assert cache.isEmpty()
 
 
 def test_hash_sample_deterministic_under_repartitioning(spark):
@@ -620,7 +653,11 @@ def test_token_shards_missing_contract(spark):
         token_shards(docs, toks, budget=100, missing="bogus")
 
 
-def test_connected_components_raises_on_unconverged(spark):
+def test_connected_components_raises_on_unconverged(spark, cc_paths):
+    """``max_iter`` bounds the distributed loop: one round cannot
+    label a 4-chain, so ``converge`` raises. The driver-side
+    union–find runs no rounds, so under the broadcast bound the same
+    call returns the full labelling."""
     import pytest as _pytest
     from stock_indicators_etl_spark.llmdata.dedup import connected_components
 
@@ -628,44 +665,151 @@ def test_connected_components_raises_on_unconverged(spark):
         pd.DataFrame({"doc_a": [0, 1, 2], "doc_b": [1, 2, 3]})
     )
     verts = spark.createDataFrame(pd.DataFrame({"doc_id": [0, 1, 2, 3]}))
-    with _pytest.raises(RuntimeError, match="did not reach the fixpoint"):
-        connected_components(edges, verts, max_iter=1)
+    for path in cc_paths():
+        if path == "converge":
+            with _pytest.raises(RuntimeError, match="did not reach the fixpoint"):
+                connected_components(edges, verts, max_iter=1)
+        else:
+            got = connected_components(edges, verts, max_iter=1).collect()
+            assert {r.component for r in got} == {0}
 
 
-def test_cc_star_matches_label_on_random_graphs(spark):
+def _spy_cc(monkeypatch, frame):
+    """Record each ``converge`` call's start frame and the row count of
+    each Arrow collect (how edge rows reach the driver) while a
+    connected-components call runs; returns ``(rounds, collected)``."""
+    from stock_indicators_etl_spark.operators import graph
+
+    rounds, collected = [], []
+    converge, to_arrow = graph.converge, frame.toArrow
+
+    def spy_converge(*args, **kwargs):
+        rounds.append(args[0])
+        return converge(*args, **kwargs)
+
+    def spy_to_arrow(self):
+        table = to_arrow(self)
+        collected.append(table.num_rows)
+        return table
+
+    monkeypatch.setattr(graph, "converge", spy_converge)
+    monkeypatch.setattr(frame, "toArrow", spy_to_arrow)
+    return rounds, collected
+
+
+@pytest.mark.parametrize("method", ["label", "star"])
+def test_connected_components_union_find_bound(spark, monkeypatch, method):
+    """The driver-side union–find takes the pinned edge rows only up
+    to the bound (broadcast threshold bytes over the 16-byte row of
+    two longs). One row over it: at most ``bound + 1`` rows reach the
+    driver and ``converge`` runs; exactly at it: no round runs."""
+    from stock_indicators_etl_spark.llmdata.dedup import connected_components
+
+    n = 10  # a 10-edge chain: the label pin holds 20 rows, star's 10
+    pinned = 2 * n if method == "label" else n
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
+    )
+    verts = spark.createDataFrame([(i,) for i in range(n + 2)], "doc_id long")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        for bound in (pinned - 1, pinned):
+            spark.conf.set(key, str(16 * bound))
+            with monkeypatch.context() as m:
+                rounds, collected = _spy_cc(m, type(edges))
+                out = connected_components(edges, verts, method=method)
+            assert collected[0] == min(pinned, bound + 1)
+            assert max(collected) <= bound + 1
+            assert bool(rounds) == (bound < pinned)
+            got = {r.doc_id: r.component for r in out.collect()}
+            assert got == {**{i: 0 for i in range(n + 1)}, n + 1: n + 1}
+    finally:
+        spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("method", ["label", "star"])
+def test_connected_components_union_find_row_cap(spark, monkeypatch, method):
+    """A broadcast threshold raised for join tuning does not raise the
+    union–find bound past ``UNION_FIND_MAX_ROWS``: with a 1 TiB
+    threshold (past ``Int.MaxValue`` rows of 16 bytes) and the cap at
+    4, a 10-edge chain sends at most 5 rows to the driver and the
+    distributed loop labels it."""
+    from stock_indicators_etl_spark.llmdata import dedup
+
+    n = 10
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(n)], "doc_a long, doc_b long"
+    )
+    verts = spark.createDataFrame([(i,) for i in range(n + 2)], "doc_id long")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1t")
+        with monkeypatch.context() as m:
+            m.setattr(dedup, "UNION_FIND_MAX_ROWS", 4)
+            assert dedup._union_find_bound(edges) == 4
+            rounds, collected = _spy_cc(m, type(edges))
+            out = dedup.connected_components(edges, verts, method=method)
+        assert collected and max(collected) <= 5
+        assert rounds
+        got = {r.doc_id: r.component for r in out.collect()}
+        assert got == {**{i: 0 for i in range(n + 1)}, n + 1: n + 1}
+        assert dedup._union_find_bound(edges) == dedup.UNION_FIND_MAX_ROWS
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_union_find_bound_without_jvm_handles(spark, monkeypatch):
+    """Where the frame has no JVM handle to read the threshold and the
+    row width from (a Spark Connect session), the bound is ``None``
+    and connected components takes the distributed loop."""
+    from stock_indicators_etl_spark.llmdata.dedup import _union_find_bound
+
+    edges = spark.createDataFrame([(0, 1)], "doc_a long, doc_b long")
+    assert _union_find_bound(edges) is not None
+    monkeypatch.delattr(edges, "_jdf")
+    assert _union_find_bound(edges) is None
+
+
+def test_cc_star_matches_label_on_random_graphs(spark, cc_paths):
     """VERDICT r2 #8: large-star/small-star produces the identical
     (vertex -> min-of-component) mapping as min-label propagation on
-    random graphs of several densities, including string ids."""
+    random graphs of several densities, including string ids — on the
+    distributed path and under the union–find bound alike."""
     import numpy as np
 
     from stock_indicators_etl_spark.llmdata.dedup import connected_components
 
-    rng = np.random.default_rng(5)
-    for n, m in ((30, 15), (30, 40), (50, 120)):
-        a = rng.integers(0, n, m)
-        b = rng.integers(0, n, m)
+    for path in cc_paths():
+        rng = np.random.default_rng(5)
+        for n, m in ((30, 15), (30, 40), (50, 120)):
+            a = rng.integers(0, n, m)
+            b = rng.integers(0, n, m)
+            edges = spark.createDataFrame(
+                pd.DataFrame({"doc_a": a.tolist(), "doc_b": b.tolist()})
+            )
+            verts = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
+            lab = {
+                r.doc_id: r.component
+                for r in connected_components(edges, verts, method="label").collect()
+            }
+            star = {
+                r.doc_id: r.component
+                for r in connected_components(edges, verts, method="star").collect()
+            }
+            assert star == lab, path
+        # string ids through the star path (greatest/least on strings)
+        ids = [f"d-{i:02d}" for i in range(8)]
         edges = spark.createDataFrame(
-            pd.DataFrame({"doc_a": a.tolist(), "doc_b": b.tolist()})
+            pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]})
         )
-        verts = spark.createDataFrame(pd.DataFrame({"doc_id": list(range(n))}))
-        lab = {
-            r.doc_id: r.component
-            for r in connected_components(edges, verts, method="label").collect()
-        }
-        star = {
+        verts = spark.createDataFrame(pd.DataFrame({"doc_id": ids + ["solo"]}))
+        got = {
             r.doc_id: r.component
             for r in connected_components(edges, verts, method="star").collect()
         }
-        assert star == lab
-    # string ids through the star path (greatest/least on strings)
-    ids = [f"d-{i:02d}" for i in range(8)]
-    edges = spark.createDataFrame(pd.DataFrame({"doc_a": ids[:-1], "doc_b": ids[1:]}))
-    verts = spark.createDataFrame(pd.DataFrame({"doc_id": ids + ["solo"]}))
-    got = {
-        r.doc_id: r.component
-        for r in connected_components(edges, verts, method="star").collect()
-    }
-    assert got == {**{i: "d-00" for i in ids}, "solo": "solo"}
+        assert got == {**{i: "d-00" for i in ids}, "solo": "solo"}, path
 
 
 def test_cc_star_chain_converges_in_log_rounds(spark):

@@ -562,7 +562,13 @@ GOLDEN_FINGERPRINTS = {
     # nl at 0 (a cross-join graph build would bump it — the regression
     # this row exists to catch, DESIGN 4.22)
     "rp_topk": {"exchange": 1, "bexchange": 1, "bhj": 0, "smj": 0, "shj": 0, "python": 0, "nl": 1, "sort": 3},
-    "link_predict": {"exchange": 13, "bexchange": 1, "bhj": 1, "smj": 4, "shj": 0, "python": 0, "nl": 0, "sort": 10},
+    # link_prediction_scores pins its symmetrised edge list `und`
+    # eagerly, so the plan reads the pin instead of re-deriving it in
+    # six branches: exchange 13 -> 3, smj 4 -> 0, sort 10 -> 0 (joins
+    # on the measured pin broadcast). Re-derived on purpose: 26 -> 13
+    # jobs at sf0.01, and bench.py --only=link_predict at sf0.1 read
+    # 5.03 -> 3.66 s in the median of 10 interleaved pairs, 10/10 lower
+    "link_predict": {"exchange": 3, "bexchange": 4, "bhj": 4, "smj": 0, "shj": 0, "python": 0, "nl": 0, "sort": 0},
     # r8: allpairs_join carries _n on the posting structs — the two
     # corpus-sized broadcast joins of r7 are gone. r9: EVERY join in
     # the unbounded-candidate path is hint("merge")-pinned (bhj 5 → 0,

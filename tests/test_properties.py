@@ -228,6 +228,56 @@ def test_connected_components_partition_invariants(spark, raw_edges):
 
 
 @settings(
+    max_examples=5,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    st.lists(st.tuples(st.integers(0, 11), st.integers(0, 11)), max_size=16),
+    st.sampled_from(["long", "string"]),
+)
+def test_connected_components_paths_agree(spark, cc_paths, raw_edges, id_type):
+    """Driver-side union–find, min-label propagation and
+    large-star/small-star label every vertex with the same component
+    (its minimum id, in Spark's order) on any edge list, self-loops
+    included, with long ids and with string ids ("v10" < "v2")."""
+    from unittest import mock
+
+    from stock_indicators_etl_spark.llmdata.dedup import connected_components
+    from stock_indicators_etl_spark.operators import graph
+
+    def ident(i):
+        return i if id_type == "long" else f"v{i}"
+
+    schema = f"doc_a {id_type}, doc_b {id_type}"
+    edges = spark.createDataFrame(
+        [(ident(a), ident(b)) for a, b in raw_edges], schema
+    )
+    verts = spark.createDataFrame([(ident(i),) for i in range(12)], f"doc_id {id_type}")
+    # reference: flood each component, label it with its minimum
+    nbrs = {ident(i): set() for i in range(12)}
+    for a, b in raw_edges:
+        nbrs[ident(a)].add(ident(b))
+        nbrs[ident(b)].add(ident(a))
+    want = {}
+    for v in nbrs:
+        if v not in want:
+            comp, todo = {v}, [v]
+            while todo:
+                for w in nbrs[todo.pop()] - comp:
+                    comp.add(w)
+                    todo.append(w)
+            want.update(dict.fromkeys(comp, min(comp)))
+    for path in cc_paths():
+        for method in ("label", "star"):
+            with mock.patch.object(graph, "converge", wraps=graph.converge) as loop:
+                out = connected_components(edges, verts, method=method)
+            assert loop.called == (path == "converge"), (path, method)
+            got = {r.doc_id: r.component for r in out.collect()}
+            assert got == want, (path, method)
+
+
+@settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],

@@ -98,10 +98,11 @@ class TestUnigramEncodeWordsConvention:
 
 
 class TestPinLedgerPolicy:
-    def test_long_chain_components_cross_checkpoint_windows(self, spark):
+    def test_long_chain_components_cross_checkpoint_windows(self, spark, cc_paths):
         """Integration: a diameter-8 chain forces the fixpoint loop
         through multiple persist/checkpoint windows; labels must
-        still converge to the component minimum."""
+        still converge to the component minimum (and the driver-side
+        union–find must give the same labels)."""
         from stock_indicators_etl_spark.llmdata.dedup import (
             connected_components,
         )
@@ -113,12 +114,13 @@ class TestPinLedgerPolicy:
         vertices = spark.createDataFrame(
             [(i,) for i in range(n + 2)], "doc_id long"
         )
-        got = {
-            r["doc_id"]: r["component"]
-            for r in connected_components(edges, vertices).collect()
-        }
-        assert all(got[i] == 0 for i in range(n))
-        assert got[n] == n and got[n + 1] == n + 1
+        for path in cc_paths():
+            got = {
+                r["doc_id"]: r["component"]
+                for r in connected_components(edges, vertices).collect()
+            }
+            assert all(got[i] == 0 for i in range(n)), path
+            assert got[n] == n and got[n + 1] == n + 1, path
 
 
 class TestBenchSummaryLine:
